@@ -12,9 +12,9 @@ as Iceberg v2 copy-on-write does it, Spark-first:
 1. Discover *affected files* with a ``_metadata.file_path`` semi-join
    against the source keys — a broadcast join at any realistic source
    size, touching only file-path metadata.
-2. Rewrite only those files (update = left join + conditional
-   replace; delete = negated filter), carry every untouched file into
-   the new snapshot verbatim.
+2. Rewrite only those files (MERGE = one full outer join with the
+   source under the compiled WHEN clauses; delete = negated filter),
+   carry every untouched file into the new snapshot verbatim.
 
 At 100 TB this means a MERGE touching 0.1% of keys rewrites ~0.1% of
 files, not the table.
@@ -23,6 +23,7 @@ files, not the table.
 from __future__ import annotations
 
 import urllib.parse
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -337,6 +338,285 @@ def delete_where(
     }
 
 
+@dataclass(frozen=True)
+class WhenClause:
+    """One MERGE clause. ``match`` is ``"matched"``, ``"not_matched"``
+    or ``"not_matched_by_source"``; ``action`` is ``"update"``,
+    ``"delete"`` or ``"insert"``. ``cond`` and ``values`` (column →
+    SQL expression: an update names the columns it sets, an insert
+    every column) are SQL text resolved the way Spark resolves its own
+    MERGE: matched clauses see both aliases, inserts only the source,
+    NOT MATCHED BY SOURCE clauses only the target."""
+
+    match: str
+    action: str
+    cond: str | None = None
+    values: dict[str, str] = field(default_factory=dict)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _first_applicable(clauses: list[WhenClause]) -> str:
+    """SQL for the index of the first clause whose condition holds, or
+    -1 — first applicable wins, in clause order."""
+    if not clauses:
+        return "-1"
+    whens = " ".join(
+        f"WHEN ({c.cond or 'TRUE'}) THEN {i}" for i, c in enumerate(clauses)
+    )
+    return f"CASE {whens} ELSE -1 END"
+
+
+def _by_clause(act: str, picks: list[str | None], default: str) -> str:
+    """``CASE act WHEN i THEN picks[i] … ELSE default END`` over the
+    clauses that pick something."""
+    whens = " ".join(f"WHEN {i} THEN {p}" for i, p in enumerate(picks) if p is not None)
+    return f"CASE {act} {whens} ELSE {default} END" if whens else default
+
+
+def _aliased(df: DataFrame, alias: str, exprs: dict[str, str]) -> DataFrame:
+    """``df`` under ``alias`` plus ``exprs`` (name → SQL) evaluated
+    where only ``df`` is in scope."""
+    return df.alias(alias).select(
+        "*", *[F.expr(e).alias(n) for n, e in exprs.items()]
+    ).alias(alias)
+
+
+class MergeEffects:
+    """MERGE clauses compiled into the two passes a copy-on-write or
+    merge-on-read MERGE makes over the target. The clause text goes
+    into ``F.expr`` over the aliased target and source DataFrames, so
+    no temp view is registered, and a source from another session (a
+    ``foreachBatch`` micro-batch) joins as it is.
+
+    - ``affected`` (pass a): the distinct ``__fp`` of target rows the
+      source keys match, plus rows a NOT MATCHED BY SOURCE clause
+      claims.
+    - ``rows`` (pass b): the affected rows FULL OUTER JOINed with the
+      source under one projection that applies the first applicable
+      clause of each row's family. Every output row carries the table
+      columns and ``__op``: ``copy`` (target row unchanged),
+      ``update``, ``delete``, ``insert``, or NULL for a source row no
+      insert clause takes.
+
+    The NOT MATCHED BY SOURCE and insert clauses are evaluated on the
+    target and the source before the join, so their unqualified names
+    bind to that side alone."""
+
+    def __init__(
+        self,
+        cols: list[str],
+        on_pairs: list[tuple[str, str]],
+        clauses: list[WhenClause],
+        talias: str = "t",
+        salias: str = "s",
+    ) -> None:
+        self.cols = cols
+        self.talias, self.salias = talias, salias
+        self.ta, self.sa = _quote(talias), _quote(salias)
+        self.on = F.expr(" AND ".join(
+            f"{self.ta}.{_quote(t)} = {self.sa}.{_quote(s)}" for t, s in on_pairs
+        ))
+        self.matched = [c for c in clauses if c.match == "matched"]
+        self.inserts = [c for c in clauses if c.match == "not_matched"]
+        self.nmbs = [c for c in clauses if c.match == "not_matched_by_source"]
+
+    def affected(self, target: DataFrame, source: DataFrame) -> DataFrame:
+        if not self.nmbs:
+            hits = target.alias(self.talias).join(
+                F.broadcast(source.alias(self.salias)), self.on, "left_semi"
+            )
+        else:
+            claim = " OR ".join(f"({c.cond or 'TRUE'})" for c in self.nmbs)
+            hits = (
+                _aliased(target, self.talias, {"__claim": claim})
+                .join(
+                    F.broadcast(_aliased(source, self.salias, {"__s": "TRUE"})),
+                    self.on,
+                    "left",
+                )
+                .filter(f"{self.sa}.__s OR {self.ta}.__claim")
+            )
+        return hits.select(f"{self.ta}.__fp").distinct()
+
+    def matches(self, target: DataFrame, source: DataFrame) -> bool:
+        """Whether any target row matches a source row."""
+        return (
+            target.alias(self.talias)
+            .join(F.broadcast(source.alias(self.salias)), self.on, "left_semi")
+            .limit(1)
+            .count()
+            > 0
+        )
+
+    def rows(
+        self, target: DataFrame, source: DataFrame, keep: tuple[str, ...] = ()
+    ) -> DataFrame:
+        """Pass b; ``keep`` names target columns passed through as they
+        are (the positional-delete ``__path``/``__pos``)."""
+        ta, sa, cols = self.ta, self.sa, self.cols
+
+        def side(tag: str, clauses: list[WhenClause]) -> dict[str, str]:
+            # one side's first applicable clause and every value its
+            # clauses set
+            out = {"__" + tag: "TRUE", f"__{tag}act": _first_applicable(clauses)}
+            for i, c in enumerate(clauses):
+                for j, col in enumerate(cols):
+                    if col in c.values:
+                        out[f"__{tag}{i}_{j}"] = c.values[col]
+            return out
+
+        def per_family(nmbs: str, insert: str, matched: str) -> str:
+            return (
+                f"CASE WHEN {sa}.__s IS NULL THEN {nmbs} "
+                f"WHEN {ta}.__t IS NULL THEN {insert} ELSE {matched} END"
+            )
+
+        def kinds(clauses: list[WhenClause]) -> list[str]:
+            return [f"'{c.action}'" for c in clauses]
+
+        outs = {
+            "__op": per_family(
+                _by_clause(f"{ta}.__tact", kinds(self.nmbs), "'copy'"),
+                _by_clause(f"{sa}.__sact", kinds(self.inserts), "NULL"),
+                _by_clause("__mact", kinds(self.matched), "'copy'"),
+            )
+        }
+        for j, col in enumerate(cols):
+            own = f"{ta}.{_quote(col)}"
+            nmbs = [f"{ta}.__t{i}_{j}" if col in c.values else None for i, c in enumerate(self.nmbs)]
+            ins = [f"{sa}.__s{i}_{j}" if col in c.values else None for i, c in enumerate(self.inserts)]
+            matched = [f"({c.values[col]})" if col in c.values else None for c in self.matched]
+            outs[col] = per_family(
+                _by_clause(f"{ta}.__tact", nmbs, own),
+                _by_clause(f"{sa}.__sact", ins, "NULL"),
+                _by_clause("__mact", matched, own),
+            )
+        joined = _aliased(target, self.talias, side("t", self.nmbs)).join(
+            _aliased(source, self.salias, side("s", self.inserts)),
+            self.on,
+            "full_outer",
+        )
+        return joined.withColumn(
+            "__mact", F.expr(_first_applicable(self.matched))
+        ).select(
+            *[F.expr(e).alias(n) for n, e in outs.items()],
+            *[F.col(f"{ta}.{_quote(k)}") for k in keep],
+        )
+
+
+def merge(
+    tbl: IceTable,
+    source: DataFrame,
+    effects: MergeEffects,
+    mode: str = "copy-on-write",
+    isolation: str = "strict",
+) -> dict[str, int]:
+    """Run a compiled MERGE in two passes over the target: one
+    ``collect`` of the affected files (pass a), then one write of the
+    affected rows joined with the source (pass b). Untouched files
+    carry into the new snapshot verbatim.
+
+    ``mode="copy-on-write"`` rewrites the affected files whole.
+    ``mode="merge-on-read"`` (Iceberg's ``write.merge.mode``) leaves
+    them in place: ONE commit adds a positional delete file masking the
+    updated and deleted rows, plus data files holding the updated
+    images and the inserts. Both read the target THROUGH its current
+    deletes, so an earlier merge-on-read delete is never resurrected."""
+    cols = tbl._column_names()
+    mor = mode == "merge-on-read"
+    files = tbl.meta.current_files()
+    hit = (
+        _affected_paths(effects.affected(_with_fp(tbl, files), source))
+        if files
+        else set()
+    )
+    affected = [f for f in files if f["path"] in hit]
+    dels = _current_deletes(tbl)
+    rows = effects.rows(
+        tbl._apply_deletes(affected, dels, keep_pos=mor),
+        source,
+        keep=("__path", "__pos") if mor else (),
+    )
+    spec_id = tbl.meta.current_spec_id
+    spec = tbl.meta.specs[spec_id]
+    if not mor:
+        new_files = tbl._write_files(
+            rows.filter("__op IN ('copy', 'update', 'insert')").select(*cols),
+            spec, spec_id,
+        )
+        tbl._commit_snapshot_delta(
+            new_files,
+            affected,
+            "merge",
+            rebase=_cow_rebase(
+                tbl, files, dels, {f["path"] for f in affected}, new_files,
+                # a concurrently-appended row the source matches would
+                # have been updated/deleted had the MERGE run second —
+                # serializable must re-plan
+                lambda df: effects.matches(df, source),
+                isolation,
+            ),
+        )
+        return {
+            "files_total": len(files),
+            "files_rewritten": len(affected),
+            "files_untouched": len(files) - len(affected),
+        }
+
+    changed = rows.filter("__op IN ('update', 'delete', 'insert')").persist()
+    try:
+        new_files = tbl._write_files(
+            changed.filter("__op <> 'delete'").select(*cols), spec, spec_id
+        )
+        if affected:
+            positions = changed.filter("__op IN ('update', 'delete')").select(
+                F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
+            )
+            paths, n_pos, content = _write_delete_sidecar(
+                tbl, "posdel", positions.orderBy("file_path", "pos")
+            )
+        else:
+            paths, n_pos, content = [], 0, None
+    finally:
+        changed.unpersist()
+    entries = _pos_delete_entries(tbl, paths, n_pos, content) if n_pos else []
+    tbl._commit_snapshot_delta(
+        new_files,
+        [],
+        "merge-mor",
+        added_deletes=entries,
+        rebase=_mor_append_rebase(
+            tbl, tbl.meta, tbl.meta.current_snapshot_id, dels, new_files, entries
+        ),
+    )
+    return {"positions_deleted": n_pos, "files_added": len(new_files)}
+
+
+def _upsert_effects(tbl: IceTable, source: DataFrame, on: list[str]) -> MergeEffects:
+    """The API MERGE as clauses: matched rows take the source's
+    non-key columns, unmatched source rows insert, and a boolean
+    ``__delete`` source column turns its matched rows into deletes
+    that never insert."""
+    cols = tbl._column_names()
+    flagged = "coalesce(s.__delete, FALSE)" if "__delete" in source.columns else None
+    clauses = [
+        WhenClause("matched", "delete", flagged),
+        WhenClause(
+            "matched", "update",
+            values={c: f"s.{_quote(c)}" for c in cols if c not in on},
+        ),
+        WhenClause(
+            "not_matched", "insert",
+            f"NOT {flagged}" if flagged else None,
+            {c: f"s.{_quote(c)}" for c in cols},
+        ),
+    ]
+    return MergeEffects(cols, [(k, k) for k in on], clauses if flagged else clauses[1:])
+
+
 def merge_into(
     tbl: IceTable,
     source: DataFrame,
@@ -346,81 +626,12 @@ def merge_into(
     """MERGE INTO (A9): source schema == target schema; matched rows
     take the source's non-key columns, unmatched source rows insert.
 
-    Effect protocol for the general MERGE grammar (WHEN MATCHED THEN
-    DELETE, conditional clauses): a boolean ``__delete`` column on
-    ``source`` marks keys whose matched target rows are dropped in the
-    rewrite instead of updated; ``__delete`` rows never insert. The
-    CoW mechanics are unchanged — only files holding matched keys are
+    Effect protocol for the general MERGE grammar: a boolean
+    ``__delete`` column on ``source`` marks keys whose matched target
+    rows are dropped in the rewrite instead of updated; ``__delete``
+    rows never insert. Only files holding matched keys are
     rewritten."""
-    cols = tbl._column_names()
-    non_keys = [c for c in cols if c not in on]
-    files = tbl.meta.current_files()
-
-    has_delete = "__delete" in source.columns
-    src_cols = cols + (["__delete"] if has_delete else [])
-    src = source.select(*src_cols).withColumn("__matched", F.lit(True))
-
-    # 1. Affected files: any file holding a row whose key appears in
-    # source. An empty table has no file-backed scan (no _metadata
-    # column) — and trivially no affected files.
-    if files:
-        target = _with_fp(tbl, files)
-        hit_paths = _affected_paths(
-            target.join(F.broadcast(source.select(*on).distinct()), on, "left_semi")
-        )
-    else:
-        hit_paths = set()
-    affected = [f for f in files if f["path"] in hit_paths]
-    untouched = [f for f in files if f["path"] not in hit_paths]
-
-    # 2. Rewrite affected rows with updates applied; matched rows
-    # flagged __delete drop out of the rewrite entirely.
-    t = _rows_of(tbl, affected)
-    joined = t.join(F.broadcast(src), on, "left")
-    if has_delete:
-        joined = joined.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-    updated = joined.select(
-        *on,
-        *[
-            F.when(F.col("__matched"), src[c]).otherwise(t[c]).alias(c)
-            for c in non_keys
-        ],
-    ).select(*cols)
-
-    # 3. Insert source rows that matched nothing. (A key matching any
-    # target row would have made its file "affected", so anti-joining
-    # the affected rows is anti-joining the whole table.)
-    ins_src = source.filter(~F.coalesce(F.col("__delete"), F.lit(False))) if has_delete else source
-    inserts = ins_src.select(*cols).join(t.select(*on).distinct(), on, "left_anti")
-
-    spec_id = tbl.meta.current_spec_id
-    new_files = tbl._write_files(updated.unionByName(inserts), tbl.meta.specs[spec_id], spec_id)
-    src_keys = source.select(*on).distinct()
-    tbl._commit_snapshot_delta(
-        new_files,
-        affected,
-        "merge",
-        rebase=_cow_rebase(
-            tbl,
-            files,
-            _current_deletes(tbl),
-            set(hit_paths),
-            new_files,
-            # a concurrently-appended row whose key appears in the
-            # MERGE source would have been updated/deleted had the
-            # MERGE run second — serializable must re-plan
-            lambda df: df.join(F.broadcast(src_keys), on, "left_semi")
-            .limit(1)
-            .count()
-            > 0,
-            isolation,
-        ),
-    )
-    return {
-        "files_total": len(files),
-        "files_rewritten": len(affected),
-        "files_untouched": len(untouched),
-    }
+    return merge(tbl, source, _upsert_effects(tbl, source, on), isolation=isolation)
 
 
 def update_where(
@@ -513,6 +724,30 @@ def _write_delete_sidecar(tbl: IceTable, prefix: str, df: DataFrame):
 
     content = tables[0] if len(tables) == 1 else _pa.concat_tables(tables)
     return paths, content.num_rows, content
+
+
+def _pos_delete_entries(tbl: IceTable, paths, n_pos: int, content) -> list[dict]:
+    """Manifest entries for a positional delete sidecar written by
+    ``_write_delete_sidecar``. Each records the delete's TARGET data
+    files (Iceberg keeps the same information in manifest stats):
+    readers then apply the (path, pos) anti-join only to the named
+    files and scan every other file clean — no _metadata generation,
+    no anti-join on the untouched part of the table. Metadata-scale:
+    one normalized path per touched file."""
+    target_paths = sorted(
+        {_norm_path(u) for u in content.column("file_path").unique().to_pylist()}
+    )
+    dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
+    return [
+        {
+            "path": p,
+            "record_count": n_pos,
+            "kind": "pos",
+            "dseq": dseq,
+            "target_paths": target_paths,
+        }
+        for p in paths
+    ]
 
 
 def delete_where_mor(
@@ -623,11 +858,7 @@ def _commit_eq_delete(
         {"path": p, "record_count": n_keys, "keys": list(keys), "dseq": dseq}
         for p in paths
     ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    existing = _current_deletes(tbl)
     # Delta commit: the head's data AND delete manifests carry by
     # reference; only the new sidecar entries are written — the commit
     # never materializes the live file list (O(|keys|) at any table
@@ -740,41 +971,14 @@ def delete_where_pos(tbl: IceTable, condition: str) -> dict[str, int]:
     paths, n_pos, content = _write_delete_sidecar(
         tbl, "posdel", matching.orderBy("file_path", "pos")
     )
-    # Record the delete's TARGET data files on the entry (Iceberg
-    # keeps the same information in manifest stats): readers then
-    # apply the (path, pos) anti-join only to the named files and
-    # scan every other file clean — no _metadata generation, no
-    # anti-join on the untouched part of the table. Metadata-scale:
-    # one normalized path per touched file.
-    target_paths = sorted(
-        {
-            _norm_path(u)
-            for u in content.column("file_path").unique().to_pylist()
-        }
-    )
-    dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-    entries = [
-        {
-            "path": p,
-            "record_count": n_pos,
-            "kind": "pos",
-            "dseq": dseq,
-            "target_paths": target_paths,
-        }
-        for p in paths
-    ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    entries = _pos_delete_entries(tbl, paths, n_pos, content)
     tbl._commit_snapshot_delta(
         [],
         [],
         "delete-mor",
         added_deletes=entries,
         rebase=_mor_append_rebase(
-            tbl, tbl.meta, tbl.meta.current_snapshot_id, existing, [], entries
+            tbl, tbl.meta, tbl.meta.current_snapshot_id, _current_deletes(tbl), [], entries
         ),
     )
     return {"delete_files_added": len(entries), "positions_deleted": n_pos}
@@ -830,40 +1034,14 @@ def update_where_mor(
         # nothing matched: drop the empty sidecar-dir artifacts and
         # leave the table untouched (no empty commit)
         return {"positions_deleted": 0, "files_added": 0}
-    target_paths = sorted(
-        {
-            _norm_path(u)
-            for u in content.column("file_path").unique().to_pylist()
-        }
-    )
-    dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-    entries = [
-        {
-            "path": p,
-            "record_count": n_pos,
-            "kind": "pos",
-            "dseq": dseq,
-            "target_paths": target_paths,
-        }
-        for p in paths
-    ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
+    entries = _pos_delete_entries(tbl, paths, n_pos, content)
     tbl._commit_snapshot_delta(
         new_files,
         [],
         "update-mor",
         added_deletes=entries,
         rebase=_mor_append_rebase(
-            tbl,
-            tbl.meta,
-            tbl.meta.current_snapshot_id,
-            existing,
-            new_files,
-            entries,
+            tbl, tbl.meta, tbl.meta.current_snapshot_id, dels, new_files, entries
         ),
     )
     return {"positions_deleted": n_pos, "files_added": len(new_files)}
@@ -878,116 +1056,10 @@ def merge_into_mor(
     merge-on-read``): matched target rows are masked by ONE positional
     delete file; their updated images plus the unmatched-source
     inserts land as appended data files — all in a single commit, no
-    data-file rewrite. Supports the same ``__delete`` effect column as
-    the CoW path (matched rows flagged for deletion are masked but not
-    re-inserted).
-
-    The matching scan reads THROUGH the current delete set with row
-    positions attached, so earlier MoR deletes are never resurrected.
-    At 100 TB the commit cost is O(|matched| + |inserts|) rows.
-    """
-    from pyspark.sql import functions as F
-
-    cols = tbl._column_names()
-    non_keys = [c for c in cols if c not in on]
-    files = tbl.meta.current_files()
-    dels = _current_deletes(tbl)
-    has_delete = "__delete" in source.columns
-    live = (
-        tbl._apply_deletes(files, dels, keep_pos=True).persist()
-        if files
-        else None
-    )
-    try:
-        if live is not None:
-            # not persisted: both consumers re-derive it from the
-            # persisted `live` plus a broadcast — cheap either way
-            matched = live.join(F.broadcast(source), on, "inner")
-            positions = matched.select(
-                F.col("__path").alias("file_path"),
-                F.col("__pos").alias("pos"),
-            )
-            upd = matched
-            if has_delete:
-                upd = upd.filter(
-                    ~F.coalesce(F.col("__delete"), F.lit(False))
-                )
-            updated = upd.select(
-                *on, *[source[c].alias(c) for c in non_keys]
-            ).select(*cols)
-            ins_src = (
-                source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-                if has_delete
-                else source
-            )
-            inserts = ins_src.select(*cols).join(
-                live.select(*on).distinct(), on, "left_anti"
-            )
-        else:
-            matched = None
-            positions = None
-            updated = None
-            ins_src = (
-                source.filter(~F.coalesce(F.col("__delete"), F.lit(False)))
-                if has_delete
-                else source
-            )
-            inserts = ins_src.select(*cols)
-        new_rows = (
-            updated.unionByName(inserts) if updated is not None else inserts
-        )
-        spec_id = tbl.meta.current_spec_id
-        new_files = tbl._write_files(
-            new_rows, tbl.meta.specs[spec_id], spec_id
-        )
-        if positions is not None:
-            paths, n_pos, content = _write_delete_sidecar(
-                tbl, "posdel", positions.orderBy("file_path", "pos")
-            )
-        else:
-            paths, n_pos, content = [], 0, None
-    finally:
-        if live is not None:
-            live.unpersist()
-    entries: list[dict] = []
-    if n_pos:
-        target_paths = sorted(
-            {
-                _norm_path(u)
-                for u in content.column("file_path").unique().to_pylist()
-            }
-        )
-        dseq = int(tbl.meta.properties.get("last-sequence-number", "0")) + 1
-        entries = [
-            {
-                "path": p,
-                "record_count": n_pos,
-                "kind": "pos",
-                "dseq": dseq,
-                "target_paths": target_paths,
-            }
-            for p in paths
-        ]
-    existing = (
-        list(tbl.meta.delete_entries(tbl.meta.snapshot(tbl.meta.current_snapshot_id)))
-        if tbl.meta.current_snapshot_id is not None
-        else []
-    )
-    tbl._commit_snapshot_delta(
-        new_files,
-        [],
-        "merge-mor",
-        added_deletes=entries,
-        rebase=_mor_append_rebase(
-            tbl,
-            tbl.meta,
-            tbl.meta.current_snapshot_id,
-            existing,
-            new_files,
-            entries,
-        ),
-    )
-    return {"positions_deleted": n_pos, "files_added": len(new_files)}
+    data-file rewrite. Takes the same ``__delete`` effect column as
+    ``merge_into``. At 100 TB the commit cost is O(|matched| +
+    |inserts|) rows."""
+    return merge(tbl, source, _upsert_effects(tbl, source, on), mode="merge-on-read")
 
 
 IceTable.update_where_mor = update_where_mor

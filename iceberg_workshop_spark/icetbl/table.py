@@ -509,19 +509,22 @@ class IceTable:
             else:
                 out = out.withColumn(pcol, self._transform_expr(field))
             part_cols.append(pcol)
-        # Iceberg write.distribution-mode=hash: cluster rows by their
-        # partition tuple before the partitioned write, so each hidden
-        # partition is written by ONE task instead of every task
-        # emitting a sliver per partition — the standard fix for the
-        # small-files explosion (tasks × partitions files). "range" is
-        # covered by write.sort-order above; default (none) preserves
-        # the incoming layout.
+        # Iceberg write.distribution-mode=hash, the default here as in
+        # Iceberg's Spark writer: cluster rows by their partition tuple
+        # before the partitioned write, so each hidden partition is
+        # written by ONE task instead of every task emitting a sliver
+        # per partition (tasks × partitions small files, which every
+        # later read and copy-on-write rewrite pays for). The rebalance
+        # hint, unlike repartition, lets AQE merge small partitions and
+        # split skewed ones at the advisory size. "range" is covered by
+        # write.sort-order above; an explicit "none" keeps the incoming
+        # layout.
         if (
             part_cols
             and not order
-            and self.meta.properties.get("write.distribution-mode") == "hash"
+            and self.meta.properties.get("write.distribution-mode", "hash") == "hash"
         ):
-            out = out.repartition(*[F.col(c) for c in part_cols])
+            out = out.hint("rebalance", *[F.col(c) for c in part_cols])
         writer = out.write.mode("overwrite")
         # A28 property surface: Iceberg's write.parquet.compression-codec
         # (zstd/snappy/gzip) — applied at write time, per file, so a
@@ -1486,7 +1489,7 @@ class IceTable:
                 )
             data = part if data is None else data.unionByName(part)
         if data is None:
-            return self._read_files([])
+            return self._read_files([], with_pos=keep_pos)
         if pos_dels:
             # Positional deletes (Iceberg v2's second delete flavor):
             # (file_path, pos) pairs target rows of a SPECIFIC data

@@ -20,10 +20,10 @@ unchanged.
 Scale notes: the front-end only *dispatches* — every statement lands
 on the same CoW/MoR DataFrame plans the Python API uses (file-granular
 rewrites, broadcast-where-small), so the 100 TB posture is inherited,
-not reimplemented. The MERGE reduction computes the matched (inner
-join) and unmatched (left-anti) source projections once each — two
-joins against the target keyed on the ON columns, exactly what a
-native MERGE plans.
+not reimplemented. MERGE compiles its WHEN clauses into one projection
+over a full outer join of the affected target files with the source
+(``icetbl.dml.MergeEffects``), so the target is scanned twice: once to
+find the affected files, once to rewrite them.
 """
 
 from __future__ import annotations
@@ -501,7 +501,7 @@ _SIMPLE_SELECT_RE = re.compile(
     r"(?:\s+(?:ORDER|GROUP|LIMIT|HAVING)\b.*)?$",
     re.I | re.S,
 )
-_LIT = r"(?:\"[^\"]*\"|'[^']*'|[\w.:-]+)"
+_LIT = r"(?:(?i:TIMESTAMP|DATE)\s*(?:\"[^\"]*\"|'[^']*')|\"[^\"]*\"|'[^']*'|[\w.:-]+)"
 _BETWEEN_RE = re.compile(
     rf"(?P<col>\w+)\s+BETWEEN\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})", re.I
 )
@@ -511,6 +511,7 @@ _CMP_RE = re.compile(rf"^(?P<col>\w+)\s*(?P<op>=|<=|>=|<|>)\s*(?P<lit>{_LIT})$")
 _NOT_A_LITERAL = object()
 _TS_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?$")
 _DATE_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
+_TYPED_LIT_RE = re.compile(r"(?P<type>TIMESTAMP|DATE)\s*(?P<q>[\"'])(?P<body>.*)(?P=q)$", re.I)
 
 
 def _coerce_lit(text: str):
@@ -523,8 +524,15 @@ def _coerce_lit(text: str):
     unquoted word is an IDENTIFIER, not a literal (`origin = dest` is a
     column comparison) — returning it as a string would both mis-prune
     and mis-filter, so it maps to the _NOT_A_LITERAL sentinel and the
-    caller drops the conjunct."""
+    caller drops the conjunct. Typed ``TIMESTAMP '…'`` and ``DATE '…'``
+    literals become datetime and date objects."""
     text = text.strip()
+    if tm := _TYPED_LIT_RE.match(text):
+        try:
+            ts = datetime.fromisoformat(tm["body"].strip().replace(" ", "T"))
+        except ValueError:
+            return _NOT_A_LITERAL
+        return ts.date() if tm["type"].upper() == "DATE" else ts
     if text and text[0] in "\"'":
         s = text[1:-1]
         if _TS_LIT_RE.match(s):
@@ -984,12 +992,37 @@ class IceSqlSession:
                 return self.location_map[prefix] + loc[len(prefix):]
         return loc
 
-    def _rewrite(self, fragment: str, preregistered: set[str] | None = None) -> str:
+    def _query(self, text: str) -> DataFrame:
+        """``spark.sql`` over registered names passed as DataFrame
+        parameters: the views Spark registers for them are dropped when
+        the call returns or raises, so none outlives the statement."""
+        bind: dict[str, DataFrame] = {}
+        # escape the statement's own braces; only the parameters that
+        # _rewrite substitutes are formatted
+        text = self._rewrite(text.replace("{", "{{").replace("}", "}}"), bind=bind)
+        return self.spark.sql(text, **bind) if bind else self.spark.sql(text.format())
+
+    def _rewrite(
+        self,
+        fragment: str,
+        preregistered: set[str] | None = None,
+        bind: dict[str, DataFrame] | None = None,
+    ) -> str:
         """Swap registered table/view names for temp views (tables get
         a view over their current snapshot; ``<table>.history`` etc.
         get the matching metadata table). Names in ``preregistered``
         are substituted without re-registering (a pruned scan view is
-        already bound)."""
+        already bound). With ``bind``, no view is registered: each name
+        becomes a ``{param}`` placeholder and its DataFrame goes into
+        ``bind`` for ``spark.sql(text, **bind)``."""
+
+        def register(df: DataFrame, vname: str) -> str:
+            if bind is None:
+                df.createOrReplaceTempView(vname)
+                return vname
+            bind[f"v_{vname}"] = df
+            return f"{{v_{vname}}}"
+
         for name in sorted({**self.views, **dict.fromkeys(self.tables)}, key=len, reverse=True):
             # Presence checks and substitution both ignore quoted
             # string literals — a table name used as a VALUE is data.
@@ -1006,18 +1039,17 @@ class IceSqlSession:
                     pat = r"(?<![\w.])" + re.escape(f"{name}.{suffix}") + r"(?![\w.])"
                     if not re.search(pat, stripped):
                         continue
-                    vname = _view_name(name) + f"__{suffix}"
-                    self._meta_df(self.tables[name], suffix).createOrReplaceTempView(
-                        vname
+                    vname = register(
+                        self._meta_df(self.tables[name], suffix),
+                        _view_name(name) + f"__{suffix}",
                     )
                     fragment = _sub_outside_quotes(pat, vname, fragment)
                     stripped = _QUOTED_SPAN.sub("''", fragment)
             pat = r"(?<![\w.])" + re.escape(name) + r"(?![\w.])"
             if not re.search(pat, stripped):
                 continue
-            vname = _view_name(name)
             df = self.views[name] if name in self.views else self.tables[name].read()
-            df.createOrReplaceTempView(vname)
+            vname = register(df, _view_name(name))
             fragment = _sub_outside_quotes(pat, vname, fragment)
         return fragment
 
@@ -1257,22 +1289,23 @@ class IceSqlSession:
     # -- statement handlers -------------------------------------------
     def _merge(self, m: re.Match, when_text: str) -> None:
         """General MERGE (Iceberg grammar subset): any number of
-        ``WHEN MATCHED [AND <cond>] THEN UPDATE SET ... | DELETE``
-        clauses (first applicable wins, SQL clause order) plus an
-        optional ``WHEN NOT MATCHED [AND <cond>] THEN INSERT VALUES``.
-        Reduction: one join computes per-matched-row effects (updated
-        values or a __delete flag — rows no clause claims keep their
-        original values), the anti-join computes inserts, and
-        ``merge_into`` applies both in a single copy-on-write commit."""
+        ``WHEN MATCHED [AND <cond>] THEN UPDATE SET ... | DELETE`` and
+        ``WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET ... |
+        DELETE`` clauses (first applicable wins, SQL clause order) plus
+        an optional ``WHEN NOT MATCHED [AND <cond>] THEN INSERT``. The
+        clauses compile to one ``dml.MergeEffects`` projection, which
+        ``dml.merge`` applies in a single commit in the table's
+        ``write.merge.mode``."""
+        from iceberg_workshop_spark.icetbl.dml import MergeEffects, WhenClause, merge
+
         tbl = self._table(m["target"])
-        talias = m["talias"] or _view_name(m["target"])
+        talias = m["talias"] or m["target"].split(".")[-1]
         # alias-less `USING s ON ...`: the source is referenced by its
         # (last-component) table name, standard SQL
         salias = m["salias"] or (
             m["srcname"].split(".")[-1] if m["srcname"] else "__merge_src"
         )
-        src_sql = m["src"] or f"SELECT * FROM {m['srcname']}"
-        src_df = self.spark.sql(self._rewrite(src_sql))
+        src_df = self._query(m["src"] or f"SELECT * FROM {m['srcname']}")
         if m.group("evolve"):
             # MERGE WITH SCHEMA EVOLUTION: source columns absent from
             # the target are added (metadata-only) before the merge;
@@ -1283,8 +1316,7 @@ class IceSqlSession:
             for f in src_df.schema.fields:
                 if f.name not in target_cols:
                     tbl.add_column(f.name, f.dataType.simpleString())
-        tbl.read().createOrReplaceTempView(talias)
-        src_df.createOrReplaceTempView(salias)
+        cols = tbl._column_names()
 
         on_pairs: list[tuple[str, str]] = []  # (target_col, source_col)
         for conj in re.split(r"\s+AND\s+", m["on"], flags=re.I):
@@ -1311,10 +1343,16 @@ class IceSqlSession:
             else:  # unqualified side defaults to target (MERGE scoping)
                 on_pairs.append((lc, rc))
 
+        def set_values(action: str) -> dict[str, str]:
+            set_text = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
+            sets = {}
+            for assign in _split_top_commas(set_text):
+                k, v = assign.split("=", 1)
+                sets[k.strip().rsplit(".", 1)[-1]] = v.strip()
+            return sets
+
         # ---- parse WHEN clauses (order-preserving, gap-free) --------
-        matched: list[dict] = []
-        inserts: list[dict] = []
-        nmbs: list[dict] = []  # WHEN NOT MATCHED BY SOURCE
+        clauses: list[WhenClause] = []
         for clause_text in _split_merge_clauses(when_text.strip()):
             cm = re.match(
                 r"WHEN\s+(?P<neg>NOT\s+)?MATCHED"
@@ -1333,215 +1371,91 @@ class IceSqlSession:
                 if not am:
                     raise ValueError(f"unparsed MERGE clause guard: {pre!r}")
                 cond = am["c"].strip()
-            clause = {"cond": cond}
-            if cm["neg"] and cm["bysrc"]:
-                # WHEN NOT MATCHED BY SOURCE — target rows with no
-                # source match; DELETE or UPDATE SET (target-column
-                # references only, by construction of the anti-join).
-                if action.upper() == "DELETE":
-                    clause["kind"] = "delete"
-                elif re.match(r"UPDATE\s+SET\s+", action, re.I):
-                    sets = {}
-                    set_text = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-                    for assign in _split_top_commas(set_text):
-                        k, v = assign.split("=", 1)
-                        sets[k.strip().rsplit(".", 1)[-1]] = v.strip()
-                    clause["kind"] = "update"
-                    clause["sets"] = sets
-                else:
-                    raise ValueError(
-                        "WHEN NOT MATCHED BY SOURCE supports only"
-                        f" UPDATE SET / DELETE, got: {action!r}"
-                    )
-                nmbs.append(clause)
+            if cm["neg"] and not cm["bysrc"]:
+                clauses.append(
+                    WhenClause("not_matched", "insert", cond, self._merge_insert(action, cols, salias, tbl))
+                )
                 continue
-            if cm["neg"]:
-                # Three standard INSERT forms: bare `INSERT VALUES
-                # (…)` (positional, full width), `INSERT (cols)
-                # VALUES (…)` (named subset; unnamed columns NULL),
-                # and `INSERT *` (source columns by name).
-                if re.fullmatch(r"INSERT\s*\*", action.strip(), re.I):
-                    clause["star"] = True
-                    inserts.append(clause)
-                    continue
-                clause["cols"] = None
-                im = re.match(r"INSERT\s+VALUES\s*(?=\()", action, re.I)
-                if not im:
-                    im = re.match(r"INSERT\s*(?=\()", action, re.I)
-                    if not im:
-                        raise ValueError(
-                            f"WHEN NOT MATCHED supports only INSERT, got: {action!r}"
-                        )
-                    col_text, after = _take_parens(action[im.end():])
-                    vm = re.match(r"\s*VALUES\s*(?=\()", after, re.I)
-                    if not vm:
-                        raise ValueError(
-                            f"MERGE INSERT column list must be followed by "
-                            f"VALUES, got: {after!r}"
-                        )
-                    clause["cols"] = [
-                        c.strip().rsplit(".", 1)[-1]
-                        for c in _split_top_commas(col_text)
-                    ]
-                    vals_text, trailing = _take_parens(after[vm.end():])
-                else:
-                    vals_text, trailing = _take_parens(action[im.end():])
-                if trailing.strip():
-                    raise ValueError(
-                        f"unparsed text after INSERT VALUES: {trailing!r}"
-                    )
-                clause["vals"] = _split_top_commas(vals_text)
-                inserts.append(clause)
-            elif action.upper() == "DELETE":
-                clause["kind"] = "delete"
-                matched.append(clause)
+            match = "not_matched_by_source" if cm["neg"] else "matched"
+            if action.upper() == "DELETE":
+                clauses.append(WhenClause(match, "delete", cond))
             elif re.match(r"UPDATE\s+SET\s+", action, re.I):
-                sets: dict[str, str] = {}
-                set_text = re.sub(r"^UPDATE\s+SET\s+", "", action, flags=re.I)
-                for assign in _split_top_commas(set_text):
-                    k, v = assign.split("=", 1)
-                    sets[k.strip().rsplit(".", 1)[-1]] = v.strip()
-                clause["kind"] = "update"
-                clause["sets"] = sets
-                matched.append(clause)
+                clauses.append(WhenClause(match, "update", cond, set_values(action)))
+            elif cm["neg"]:
+                raise ValueError(
+                    "WHEN NOT MATCHED BY SOURCE supports only"
+                    f" UPDATE SET / DELETE, got: {action!r}"
+                )
             else:
                 raise ValueError(f"unsupported MERGE action: {action!r}")
-        if not matched and not inserts and not nmbs:
+        if not clauses:
             raise ValueError(f"MERGE has no WHEN clauses: {when_text!r}")
-        if len(inserts) > 1:
+        if sum(c.match == "not_matched" for c in clauses) > 1:
             raise ValueError("at most one WHEN NOT MATCHED clause is supported")
-
-        cols = tbl._column_names()
-        on_sql = " AND ".join(f"{talias}.{t} = {salias}.{s}" for t, s in on_pairs)
-
-        # First applicable clause wins: __act = index of the clause,
-        # evaluated ONCE per row (lateral column alias — every value
-        # and the delete flag reference __act, so the statement stays
-        # O(columns × clauses), not O(columns × clauses²)).
-        act_sql = (
-            "CASE "
-            + " ".join(
-                f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}"
-                for i, c in enumerate(matched)
-            )
-            + " ELSE -1 END"
-        ) if matched else "-1"
-
-        def value_sql(col: str) -> str:
-            branches = " ".join(
-                f"WHEN {i} THEN ({c['sets'].get(col, f'{talias}.{col}')})"
-                for i, c in enumerate(matched)
-                if c["kind"] == "update"
-            )
-            return (
-                f"CASE __act {branches} ELSE {talias}.{col} END"
-                if branches
-                else f"{talias}.{col}"
-            )
-
-        del_ids = [str(i) for i, c in enumerate(matched) if c["kind"] == "delete"]
-        del_sql = f"__act IN ({', '.join(del_ids)})" if del_ids else "FALSE"
-        upd_proj = ", ".join(f"{value_sql(c)} AS {c}" for c in cols)
-        effects = self.spark.sql(
-            f"SELECT ({act_sql}) AS __act, {upd_proj}, ({del_sql}) AS __delete "
-            f"FROM {talias} JOIN {salias} ON {on_sql}"
-        ).drop("__act")
-        src = effects
-        for ic in inserts:
-            if ic.get("star"):
-                # INSERT *: source columns map to target columns by
-                # name — the source must provide every target column.
-                ins_proj = ", ".join(f"{salias}.{c} AS {c}" for c in cols)
-            elif ic.get("cols") is not None:
-                # INSERT (cols) VALUES (…): named subset; unnamed
-                # target columns take a typed NULL (CAST keeps
-                # unionByName from widening through VOID).
-                vals = ic["vals"]
-                if len(vals) != len(ic["cols"]):
-                    raise ValueError(
-                        f"MERGE INSERT column list width {len(ic['cols'])}"
-                        f" != VALUES width {len(vals)}"
-                    )
-                provided = dict(zip(ic["cols"], vals))
-                unknown = set(provided) - set(cols)
-                if unknown:
-                    raise ValueError(
-                        f"MERGE INSERT names unknown columns: {sorted(unknown)}"
-                    )
-                dtypes = dict(tbl.read().dtypes)
-                ins_proj = ", ".join(
-                    f"{provided[c]} AS {c}"
-                    if c in provided
-                    else f"CAST(NULL AS {dtypes[c]}) AS {c}"
-                    for c in cols
-                )
-            else:
-                vals = ic["vals"]
-                if len(vals) != len(cols):
-                    # zip() would silently truncate and die later in
-                    # unionByName with a confusing column-mismatch error.
-                    raise ValueError(
-                        f"MERGE INSERT VALUES width {len(vals)} != table width {len(cols)}"
-                    )
-                ins_proj = ", ".join(f"{v} AS {c}" for c, v in zip(cols, vals))
-            where = f" WHERE ({ic['cond']})" if ic["cond"] else ""
-            ins = self.spark.sql(
-                f"SELECT {ins_proj}, FALSE AS __delete "
-                f"FROM {salias} LEFT ANTI JOIN {talias} ON {on_sql}{where}"
-            )
-            src = src.unionByName(ins)
-        if nmbs:
-            # Target rows with NO source match, claimed first-wins by
-            # the NMBS clauses; unclaimed rows stay out of the effect
-            # set entirely (their files are rewritten only if they
-            # share a file with an affected key — merge_into keeps
-            # unmatched rows verbatim). Including claimed rows in the
-            # source makes their files "affected", which is exactly
-            # the Iceberg CoW behavior for NOT MATCHED BY SOURCE.
-            act2 = (
-                "CASE "
-                + " ".join(
-                    f"WHEN ({c['cond'] or 'TRUE'}) THEN {i}"
-                    for i, c in enumerate(nmbs)
-                )
-                + " ELSE -1 END"
-            )
-
-            def value2(col: str) -> str:
-                branches = " ".join(
-                    f"WHEN {i} THEN ({c['sets'].get(col, col)})"
-                    for i, c in enumerate(nmbs)
-                    if c["kind"] == "update"
-                )
-                return f"CASE __act {branches} ELSE {col} END" if branches else col
-
-            del2_ids = [str(i) for i, c in enumerate(nmbs) if c["kind"] == "delete"]
-            del2 = f"__act IN ({', '.join(del2_ids)})" if del2_ids else "FALSE"
-            proj2 = ", ".join(f"{value2(c)} AS {c}" for c in cols)
-            nm = (
-                self.spark.sql(
-                    f"SELECT ({act2}) AS __act, {proj2}, ({del2}) AS __delete "
-                    f"FROM {talias} LEFT ANTI JOIN {salias} ON {on_sql}"
-                )
-                .filter("__act <> -1")
-                .drop("__act")
-            )
-            src = src.unionByName(nm)
-        # Iceberg's write.merge.mode: merge-on-read masks matched rows
-        # with a positional delete and appends updates+inserts in one
-        # commit; default stays copy-on-write.
-        if (
-            tbl.meta.properties.get("write.merge.mode", "copy-on-write")
-            == "merge-on-read"
-        ):
-            tbl.merge_into_mor(src, on=[t for t, _ in on_pairs])
-        else:
-            tbl.merge_into(
-                src,
-                on=[t for t, _ in on_pairs],
-                isolation=_iso_level(tbl, "merge"),
-            )
+        merge(
+            tbl,
+            src_df,
+            MergeEffects(cols, on_pairs, clauses, talias, salias),
+            mode=tbl.meta.properties.get("write.merge.mode", "copy-on-write"),
+            isolation=_iso_level(tbl, "merge"),
+        )
         return None
+
+    @staticmethod
+    def _merge_insert(action: str, cols: list[str], salias: str, tbl: IceTable) -> dict[str, str]:
+        """A WHEN NOT MATCHED action as one SQL value per target column.
+        Three standard INSERT forms: bare ``INSERT VALUES (…)``
+        (positional, full width), ``INSERT (cols) VALUES (…)`` (named
+        subset; unnamed columns take a typed NULL) and ``INSERT *``
+        (source columns by name — the source must provide every target
+        column)."""
+        if re.fullmatch(r"INSERT\s*\*", action.strip(), re.I):
+            return {c: f"{salias}.{c}" for c in cols}
+        im = re.match(r"INSERT\s+VALUES\s*(?=\()", action, re.I)
+        if im:
+            vals_text, trailing = _take_parens(action[im.end():])
+            named = None
+        else:
+            im = re.match(r"INSERT\s*(?=\()", action, re.I)
+            if not im:
+                raise ValueError(
+                    f"WHEN NOT MATCHED supports only INSERT, got: {action!r}"
+                )
+            col_text, after = _take_parens(action[im.end():])
+            vm = re.match(r"\s*VALUES\s*(?=\()", after, re.I)
+            if not vm:
+                raise ValueError(
+                    f"MERGE INSERT column list must be followed by "
+                    f"VALUES, got: {after!r}"
+                )
+            named = [c.strip().rsplit(".", 1)[-1] for c in _split_top_commas(col_text)]
+            vals_text, trailing = _take_parens(after[vm.end():])
+        if trailing.strip():
+            raise ValueError(f"unparsed text after INSERT VALUES: {trailing!r}")
+        vals = _split_top_commas(vals_text)
+        if named is None:
+            if len(vals) != len(cols):
+                # zip() would silently truncate the row
+                raise ValueError(
+                    f"MERGE INSERT VALUES width {len(vals)} != table width {len(cols)}"
+                )
+            return dict(zip(cols, vals))
+        if len(vals) != len(named):
+            raise ValueError(
+                f"MERGE INSERT column list width {len(named)}"
+                f" != VALUES width {len(vals)}"
+            )
+        provided = dict(zip(named, vals))
+        unknown = set(provided) - set(cols)
+        if unknown:
+            raise ValueError(f"MERGE INSERT names unknown columns: {sorted(unknown)}")
+        from pyspark.sql.types import StructType
+
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in StructType.fromDDL(tbl.meta.schema_ddl).fields
+        }
+        return {c: provided.get(c, f"CAST(NULL AS {types[c]})") for c in cols}
 
     def _insert(self, m: re.Match) -> None:
         tbl = self._table(m["target"])

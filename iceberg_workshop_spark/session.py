@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark lists the paths of a file-list read in a distributed job (one
+# task per path) once there are more than
+# ``spark.sql.sources.parallelPartitionDiscovery.threshold`` of them
+# (default 32). IceTable reads hand Spark the manifest's own file list,
+# so there is nothing to discover; the job only costs seconds of driver
+# latency per read. Above this many paths Spark's parallel listing
+# still applies.
+LISTING_THRESHOLD = 10_000
+
 
 def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -30,6 +39,13 @@ def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
       per-row pickled.
     - UTC session TZ: deterministic timestamp semantics across engines
       (SURVEY.md §5.3 hash-stability rule 4).
+    - Path listing on the driver up to ``LISTING_THRESHOLD`` paths:
+      table reads pass the file list their manifest names, so a
+      distributed listing job would only re-discover known files.
+
+    Like every default here, these apply only to sessions this factory
+    builds; a caller that brings its own session (``entry(spark)`` and
+    ``queries()`` in ``__spark_entry__.py``) keeps Spark's defaults.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -49,6 +65,10 @@ def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_THRESHOLD),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

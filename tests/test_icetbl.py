@@ -781,9 +781,10 @@ def test_bloom_absent_without_property(spark, tmp_path):
 
 
 def test_write_distribution_mode_hash_compacts_partition_files(spark, tmp_path):
-    """write.distribution-mode=hash clusters rows by partition tuple
-    before the partitioned write: one file per hidden partition
-    instead of (tasks x partitions) slivers."""
+    """write.distribution-mode=hash (the default) clusters rows by
+    partition tuple before the partitioned write: one file per hidden
+    partition instead of the (tasks x partitions) slivers that an
+    explicit none writes."""
     df = spark.range(0, 4000).selectExpr(
         "id % 4 AS region", "id AS v"
     ).repartition(16)
@@ -792,6 +793,7 @@ def test_write_distribution_mode_hash_compacts_partition_files(spark, tmp_path):
         spark, str(tmp_path / "none"), "region bigint, v bigint",
         partition_spec=[spec_field("region")],
     )
+    t_none.set_properties({"write.distribution-mode": "none"})
     t_none.append(df)
     files_none = t_none.meta.current_files()
     assert len(files_none) > 4  # every task writes per-partition slivers
@@ -806,6 +808,14 @@ def test_write_distribution_mode_hash_compacts_partition_files(spark, tmp_path):
     assert len(files_hash) == 4  # one file per partition value
     assert {f["partition"]["region"] for f in files_hash} == {"0", "1", "2", "3"}
     assert t_hash.read().count() == 4000
+
+    # hash is the default: an unset property clusters the same way
+    t_default = IceTable.create(
+        spark, str(tmp_path / "default"), "region bigint, v bigint",
+        partition_spec=[spec_field("region")],
+    )
+    t_default.append(df)
+    assert len(t_default.meta.current_files()) == 4
 
 
 def test_rename_then_readd_old_name_no_collision(spark, tmp_table_dir):
@@ -966,3 +976,25 @@ def test_stream_rename_then_readd_matches_batch(spark, tmp_table_dir):
     )
     # stream == batch: old file feeds b from physical a, new 'a' NULL
     assert got == [(1, 10, None), (2, 20, 200)], got
+
+
+def test_manifest_read_launches_no_listing_job(spark, tmp_path):
+    """A table read hands Spark the manifest's file list; building the
+    DataFrame must not start a distributed listing job, even above
+    Spark's default threshold of 32 paths."""
+    t = IceTable.create(
+        spark, str(tmp_path / "many"), "k bigint, v bigint",
+        partition_spec=[spec_field("k")],
+    )
+    t.append(spark.range(40).selectExpr("id AS k", "id AS v"))
+    assert len(t.meta.current_files()) > 32
+    sc = spark.sparkContext
+    group = f"listing-probe-{os.getpid()}-{tmp_path.name}"
+    sc.setJobGroup(group, "build a table read")
+    try:
+        df = t.read()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert df.count() == 40

@@ -10,12 +10,19 @@ import random
 
 import pytest
 
-from iceberg_workshop_spark.icetbl import IceTable
+from iceberg_workshop_spark.icetbl import IceTable, spec_field
 from iceberg_workshop_spark.plans.sqlfront import IceSqlSession
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_random_merge_matches_model(spark, tmp_path, seed):
+@pytest.mark.parametrize(
+    "seed, bucketed",
+    [pytest.param(seed, False, id=str(seed)) for seed in (0, 1, 2)]
+    # a multi-file target: the MERGE rewrites only the files its
+    # source keys or NOT MATCHED BY SOURCE claims touch, and carries
+    # the rest verbatim
+    + [pytest.param(seed, True, id=f"bucketed-{seed}") for seed in (0, 1, 2)],
+)
+def test_random_merge_matches_model(spark, tmp_path, seed, bucketed):
     rng = random.Random(seed)
     n = 60
     rows = [
@@ -30,7 +37,10 @@ def test_random_merge_matches_model(spark, tmp_path, seed):
         spark,
         str(tmp_path / f"merge{seed}"),
         spark.createDataFrame(tgt_rows, "k bigint, st string, p bigint"),
+        [spec_field("k", "bucket[8]")] if bucketed else None,
     )
+    if bucketed:
+        assert len(tbl.meta.current_files()) == 8
     sess = IceSqlSession(spark)
     sess.register_table("db.t", tbl)
     sess.register_view(

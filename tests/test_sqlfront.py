@@ -1146,3 +1146,65 @@ def test_create_tblproperties_value_with_paren(spark, tmp_path):
         for r in s.sql("SHOW TBLPROPERTIES db.pp").collect()
     }
     assert props.get("comment") == "x (y)"
+
+
+def test_sql_range_predicate_on_typed_timestamps_prunes(spark, tmp_path):
+    """The SQL month-range DELETE prunes like the API call: typed
+    ``TIMESTAMP '…'`` literals become datetimes, so the month
+    partitions outside the range are never scanned."""
+    from datetime import datetime
+
+    from iceberg_workshop_spark.icetbl import Pred, spec_field
+    from iceberg_workshop_spark.icetbl.pruning import prune_files
+    from iceberg_workshop_spark.plans.sqlfront import _dnf_from_where
+
+    cond = (
+        "o_orderdate >= TIMESTAMP '1996-03-01 00:00:00' "
+        "AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'"
+    )
+    assert _dnf_from_where(cond) == [[
+        Pred("o_orderdate", ">=", datetime(1996, 3, 1)),
+        Pred("o_orderdate", "<", datetime(1996, 4, 1)),
+    ]]
+    rows = [(k, datetime(1996, 2 + k % 3, 10)) for k in range(9)]
+    tbl = IceTable.create_as(
+        spark,
+        str(tmp_path / "o"),
+        spark.createDataFrame(rows, "o_orderkey bigint, o_orderdate timestamp"),
+        [spec_field("o_orderdate", "month")],
+    )
+    s = IceSqlSession(spark)
+    s.register_table("db.o", tbl)
+    dnf = s._safe_preds(tbl, cond)
+    spec_by_id = dict(enumerate(tbl.meta.specs))
+    kept, _ = prune_files(tbl.meta.current_files(), spec_by_id, dnf)
+    months = {f["partition"]["o_orderdate_month"] for f in kept}
+    assert "1996-03" in months and "1996-02" not in months
+    s.sql(f"DELETE FROM db.o WHERE {cond}")
+    assert sorted(r.o_orderkey for r in tbl.read().collect()) == [0, 2, 3, 5, 6, 8]
+
+
+def test_merge_leaves_no_temp_views(sess, spark):
+    """A SQL MERGE binds its target, source and registered names as
+    DataFrame parameters: no temp view outlives the statement, even
+    when it raises."""
+    s, tbl = sess
+    s.register_view(
+        "staging.srcv", spark.createDataFrame([(2, "B"), (7, "G")], "id int, name string")
+    )
+    before = sorted(t.name for t in spark.catalog.listTables())
+    s.sql(
+        "MERGE INTO db.t AS target USING (SELECT * FROM staging.srcv) AS source "
+        "ON id = source.id WHEN MATCHED THEN UPDATE SET name = source.name "
+        "WHEN NOT MATCHED THEN INSERT VALUES (source.id, source.name)"
+    )
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert sorted((r.id, r.name) for r in tbl.read().collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (7, "G"),
+    ]
+    with pytest.raises(Exception, match="nope"):
+        s.sql(
+            "MERGE INTO db.t AS target USING staging.srcv AS source "
+            "ON id = source.id WHEN MATCHED THEN UPDATE SET name = source.nope"
+        )
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
