@@ -13,7 +13,8 @@ as Iceberg v2 copy-on-write does it, Spark-first:
    against the source keys — a broadcast join at any realistic source
    size, touching only file-path metadata.
 2. Rewrite only those files (MERGE = one full outer join with the
-   source under the compiled WHEN clauses; delete = negated filter),
+   source under the compiled WHEN clauses, which shuffles the affected
+   rows instead of broadcasting the source; delete = negated filter),
    carry every untouched file into the new snapshot verbatim.
 
 At 100 TB this means a MERGE touching 0.1% of keys rewrites ~0.1% of
@@ -376,12 +377,29 @@ def _by_clause(act: str, picks: list[str | None], default: str) -> str:
     return f"CASE {act} {whens} ELSE {default} END" if whens else default
 
 
-def _aliased(df: DataFrame, alias: str, exprs: dict[str, str]) -> DataFrame:
-    """``df`` under ``alias`` plus ``exprs`` (name → SQL) evaluated
-    where only ``df`` is in scope."""
-    return df.alias(alias).select(
-        "*", *[F.expr(e).alias(n) for n, e in exprs.items()]
-    ).alias(alias)
+def _chosen(
+    df: DataFrame, tag: str, family: int, clauses: list[WhenClause], cols: list[str]
+) -> tuple[DataFrame, list[str]]:
+    """``df`` plus ``{tag}act``, the first applicable of ``clauses`` on
+    the rows of ``family`` (NULL on the others), and each value those
+    clauses set as ``{tag}{i}_{j}`` (clause i, column j). A guard is
+    evaluated only on its family's rows and a value only on the rows
+    whose clause it is, so a guarded ``x / d`` or ``CAST`` never runs
+    on a row its guard excludes. Also returns the added names."""
+    act = f"{tag}act"
+    df = df.withColumn(
+        act, F.expr(f"CASE WHEN __fam = {family} THEN {_first_applicable(clauses)} END")
+    )
+    vals = {
+        f"{tag}{i}_{j}": f"CASE WHEN {act} = {i} THEN ({c.values[col]}) END"
+        for i, c in enumerate(clauses)
+        for j, col in enumerate(cols)
+        if col in c.values
+    }
+    return (
+        df.select("*", *[F.expr(e).alias(n) for n, e in vals.items()]),
+        [act, *vals],
+    )
 
 
 class MergeEffects:
@@ -401,9 +419,14 @@ class MergeEffects:
       ``update``, ``delete``, ``insert``, or NULL for a source row no
       insert clause takes.
 
-    The NOT MATCHED BY SOURCE and insert clauses are evaluated on the
-    target and the source before the join, so their unqualified names
-    bind to that side alone."""
+    A full outer join cannot broadcast, so pass b shuffles the affected
+    target rows (and ``_write_files`` shuffles the result again for its
+    hash distribution), where a broadcast of a small source would have
+    shuffled none; in exchange the target is read twice, not six
+    times. Matched clauses see both aliases; NOT MATCHED BY SOURCE
+    clauses are evaluated with the source's columns renamed away and
+    inserts with the target's, so their unqualified names bind to
+    their own side alone."""
 
     def __init__(
         self,
@@ -423,33 +446,38 @@ class MergeEffects:
         self.inserts = [c for c in clauses if c.match == "not_matched"]
         self.nmbs = [c for c in clauses if c.match == "not_matched_by_source"]
 
+    def _hits(self, target: DataFrame, source: DataFrame) -> DataFrame:
+        """Target rows some source row matches."""
+        return target.alias(self.talias).join(
+            F.broadcast(source.alias(self.salias)), self.on, "left_semi"
+        )
+
     def affected(self, target: DataFrame, source: DataFrame) -> DataFrame:
         if not self.nmbs:
-            hits = target.alias(self.talias).join(
-                F.broadcast(source.alias(self.salias)), self.on, "left_semi"
-            )
+            hits = self._hits(target, source)
         else:
+            # a matched row short-circuits the OR: the NMBS guards run
+            # only on target rows no source row matches
             claim = " OR ".join(f"({c.cond or 'TRUE'})" for c in self.nmbs)
             hits = (
-                _aliased(target, self.talias, {"__claim": claim})
+                target.alias(self.talias)
                 .join(
-                    F.broadcast(_aliased(source, self.salias, {"__s": "TRUE"})),
+                    F.broadcast(source.withColumn("__s", F.lit(True)).alias(self.salias)),
                     self.on,
                     "left",
                 )
-                .filter(f"{self.sa}.__s OR {self.ta}.__claim")
+                .select(
+                    *[F.col(f"{self.ta}.{_quote(c)}") for c in target.columns],
+                    F.col(f"{self.sa}.__s"),
+                )
+                .alias(self.talias)
+                .filter(f"__s OR ({claim})")
             )
-        return hits.select(f"{self.ta}.__fp").distinct()
+        return hits.select("__fp").distinct()
 
     def matches(self, target: DataFrame, source: DataFrame) -> bool:
         """Whether any target row matches a source row."""
-        return (
-            target.alias(self.talias)
-            .join(F.broadcast(source.alias(self.salias)), self.on, "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
+        return self._hits(target, source).limit(1).count() > 0
 
     def rows(
         self, target: DataFrame, source: DataFrame, keep: tuple[str, ...] = ()
@@ -457,53 +485,72 @@ class MergeEffects:
         """Pass b; ``keep`` names target columns passed through as they
         are (the positional-delete ``__path``/``__pos``)."""
         ta, sa, cols = self.ta, self.sa, self.cols
-
-        def side(tag: str, clauses: list[WhenClause]) -> dict[str, str]:
-            # one side's first applicable clause and every value its
-            # clauses set
-            out = {"__" + tag: "TRUE", f"__{tag}act": _first_applicable(clauses)}
-            for i, c in enumerate(clauses):
-                for j, col in enumerate(cols):
-                    if col in c.values:
-                        out[f"__{tag}{i}_{j}"] = c.values[col]
-            return out
+        tcols, scols = target.columns, source.columns
+        # __fam: 0 NOT MATCHED BY SOURCE, 1 NOT MATCHED, 2 matched
+        j = (
+            target.withColumn("__t", F.lit(True)).alias(self.talias)
+            .join(
+                source.withColumn("__s", F.lit(True)).alias(self.salias),
+                self.on,
+                "full_outer",
+            )
+            .withColumn("__fam", F.expr(
+                f"CASE WHEN {sa}.__s IS NULL THEN 0 WHEN {ta}.__t IS NULL THEN 1 ELSE 2 END"
+            ))
+        )
+        j, mine = _chosen(j, "__m", 2, self.matched, cols)
+        internal = ["__fam", *mine]
+        # target scope: the source's columns renamed away
+        j = j.select(
+            *[F.col(f"{ta}.{_quote(c)}") for c in tcols],
+            *[F.col(f"{sa}.{_quote(c)}").alias(f"__S{k}") for k, c in enumerate(scols)],
+            *internal,
+        ).alias(self.talias)
+        j, mine = _chosen(j, "__n", 0, self.nmbs, cols)
+        internal += mine
+        # source scope: the target's columns renamed away
+        j = j.select(
+            *[F.col(_quote(c)).alias(f"__T{k}") for k, c in enumerate(tcols)],
+            *[F.col(f"__S{k}").alias(c) for k, c in enumerate(scols)],
+            *internal,
+        ).alias(self.salias)
+        j, _ = _chosen(j, "__i", 1, self.inserts, cols)
 
         def per_family(nmbs: str, insert: str, matched: str) -> str:
-            return (
-                f"CASE WHEN {sa}.__s IS NULL THEN {nmbs} "
-                f"WHEN {ta}.__t IS NULL THEN {insert} ELSE {matched} END"
-            )
+            return f"CASE __fam WHEN 0 THEN {nmbs} WHEN 1 THEN {insert} ELSE {matched} END"
+
+        def picks(tag: str, clauses: list[WhenClause], j: int) -> list[str | None]:
+            return [
+                f"{tag}{i}_{j}" if cols[j] in c.values else None
+                for i, c in enumerate(clauses)
+            ]
 
         def kinds(clauses: list[WhenClause]) -> list[str]:
             return [f"'{c.action}'" for c in clauses]
 
+        own = {c: f"__T{k}" for k, c in enumerate(tcols)}
         outs = {
             "__op": per_family(
-                _by_clause(f"{ta}.__tact", kinds(self.nmbs), "'copy'"),
-                _by_clause(f"{sa}.__sact", kinds(self.inserts), "NULL"),
+                _by_clause("__nact", kinds(self.nmbs), "'copy'"),
+                _by_clause("__iact", kinds(self.inserts), "NULL"),
                 _by_clause("__mact", kinds(self.matched), "'copy'"),
             )
         }
-        for j, col in enumerate(cols):
-            own = f"{ta}.{_quote(col)}"
-            nmbs = [f"{ta}.__t{i}_{j}" if col in c.values else None for i, c in enumerate(self.nmbs)]
-            ins = [f"{sa}.__s{i}_{j}" if col in c.values else None for i, c in enumerate(self.inserts)]
-            matched = [f"({c.values[col]})" if col in c.values else None for c in self.matched]
+        for k, col in enumerate(cols):
             outs[col] = per_family(
-                _by_clause(f"{ta}.__tact", nmbs, own),
-                _by_clause(f"{sa}.__sact", ins, "NULL"),
-                _by_clause("__mact", matched, own),
+                _by_clause("__nact", picks("__n", self.nmbs, k), own[col]),
+                _by_clause("__iact", picks("__i", self.inserts, k), "NULL"),
+                _by_clause("__mact", picks("__m", self.matched, k), own[col]),
             )
-        joined = _aliased(target, self.talias, side("t", self.nmbs)).join(
-            _aliased(source, self.salias, side("s", self.inserts)),
-            self.on,
-            "full_outer",
-        )
-        return joined.withColumn(
-            "__mact", F.expr(_first_applicable(self.matched))
-        ).select(
-            *[F.expr(e).alias(n) for n, e in outs.items()],
-            *[F.col(f"{ta}.{_quote(k)}") for k in keep],
+        # store assignment: a value takes its column's type (`x / d` is
+        # a double, the column may be an int)
+        types = {f.name: f.dataType for f in target.schema.fields}
+        return j.select(
+            *[
+                (F.expr(e).cast(types[n]) if n in types else F.expr(e)).alias(n)
+                for n, e in outs.items()
+            ],
+            *[F.col(own[k]).alias(k) for k in keep],
         )
 
 
@@ -524,7 +571,9 @@ def merge(
     them in place: ONE commit adds a positional delete file masking the
     updated and deleted rows, plus data files holding the updated
     images and the inserts. Both read the target THROUGH its current
-    deletes, so an earlier merge-on-read delete is never resurrected."""
+    deletes, so an earlier merge-on-read delete is never resurrected.
+    Pass b is a shuffle join of the affected rows with the source, not
+    a broadcast (see ``MergeEffects``)."""
     cols = tbl._column_names()
     mor = mode == "merge-on-read"
     files = tbl.meta.current_files()

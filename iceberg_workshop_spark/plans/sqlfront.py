@@ -23,7 +23,8 @@ rewrites, broadcast-where-small), so the 100 TB posture is inherited,
 not reimplemented. MERGE compiles its WHEN clauses into one projection
 over a full outer join of the affected target files with the source
 (``icetbl.dml.MergeEffects``), so the target is scanned twice: once to
-find the affected files, once to rewrite them.
+find the affected files, once to rewrite them. That join shuffles the
+affected rows; it is the one rewrite that does not broadcast.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ import os
 import re
 import tempfile
 import time
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -511,7 +512,7 @@ _CMP_RE = re.compile(rf"^(?P<col>\w+)\s*(?P<op>=|<=|>=|<|>)\s*(?P<lit>{_LIT})$")
 _NOT_A_LITERAL = object()
 _TS_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}[ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?$")
 _DATE_LIT_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-_TYPED_LIT_RE = re.compile(r"(?P<type>TIMESTAMP|DATE)\s*(?P<q>[\"'])(?P<body>.*)(?P=q)$", re.I)
+_TYPED_LIT_RE = re.compile(r"(?P<type>TIMESTAMP|DATE)\s*(?P<lit>[\"'].*)$", re.I)
 
 
 def _coerce_lit(text: str):
@@ -524,15 +525,15 @@ def _coerce_lit(text: str):
     unquoted word is an IDENTIFIER, not a literal (`origin = dest` is a
     column comparison) — returning it as a string would both mis-prune
     and mis-filter, so it maps to the _NOT_A_LITERAL sentinel and the
-    caller drops the conjunct. Typed ``TIMESTAMP '…'`` and ``DATE '…'``
-    literals become datetime and date objects."""
+    caller drops the conjunct. A typed ``TIMESTAMP '…'`` or ``DATE '…'``
+    literal goes through the same shape checks as its quoted text;
+    any other body (a zone offset, a DATE with a time) is not pruned on."""
     text = text.strip()
     if tm := _TYPED_LIT_RE.match(text):
-        try:
-            ts = datetime.fromisoformat(tm["body"].strip().replace(" ", "T"))
-        except ValueError:
-            return _NOT_A_LITERAL
-        return ts.date() if tm["type"].upper() == "DATE" else ts
+        v = _coerce_lit(tm["lit"])
+        if tm["type"].upper() == "DATE":
+            return v if type(v) is date else _NOT_A_LITERAL
+        return v if isinstance(v, date) else _NOT_A_LITERAL
     if text and text[0] in "\"'":
         s = text[1:-1]
         if _TS_LIT_RE.match(s):

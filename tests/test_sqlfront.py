@@ -1208,3 +1208,59 @@ def test_merge_leaves_no_temp_views(sess, spark):
             "ON id = source.id WHEN MATCHED THEN UPDATE SET name = source.nope"
         )
     assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_sql_offset_timestamp_literal_does_not_prune(spark, tmp_path):
+    """A TIMESTAMP literal with a zone offset names an instant the
+    pruning code cannot place in a month: it must not prune, and the
+    DELETE still removes the March row that lies past the instant."""
+    from datetime import datetime
+
+    from iceberg_workshop_spark.icetbl import spec_field
+    from iceberg_workshop_spark.plans.sqlfront import _dnf_from_where
+
+    # 1996-04-01 01:00+05:00 is 1996-03-31 20:00 UTC (UTC session)
+    cond = "o_orderdate >= TIMESTAMP '1996-04-01 01:00:00+05:00'"
+    assert not _dnf_from_where(cond)
+    rows = [
+        (1, datetime(1996, 3, 10)),
+        (2, datetime(1996, 3, 31, 22)),
+        (3, datetime(1996, 4, 10)),
+    ]
+    tbl = IceTable.create_as(
+        spark,
+        str(tmp_path / "o"),
+        spark.createDataFrame(rows, "o_orderkey bigint, o_orderdate timestamp"),
+        [spec_field("o_orderdate", "month")],
+    )
+    s = IceSqlSession(spark)
+    s.register_table("db.o", tbl)
+    assert not s._safe_preds(tbl, cond)
+    s.sql(f"DELETE FROM db.o WHERE {cond}")
+    assert [r.o_orderkey for r in tbl.read().collect()] == [1]
+
+
+def test_merge_guarded_values_run_only_where_their_clause_applies(spark, tmp_path):
+    """Under ANSI mode a value that divides by zero or casts a bad
+    string raises. Each insert and NOT MATCHED BY SOURCE value runs
+    only on the rows its clause takes, so a guard protects it, and a
+    matched source row (k=2) never runs the insert values."""
+    s = _fresh_sess(spark, tmp_path)
+    s.sql("CREATE TABLE db.g (k INT, x INT, d INT) STORED BY ICEBERG")
+    s.sql("INSERT INTO db.g VALUES (1, 10, 0), (2, 20, 5), (3, 30, 0), (4, 40, 4)")
+    s.register_view(
+        "staging.gs",
+        spark.createDataFrame(
+            [(1, 7, 0, "junk"), (2, 9, 3, "junk"), (5, 50, 0, "junk"), (6, 60, 3, "2")],
+            "k int, x int, d int, v string",
+        ),
+    )
+    s.sql(
+        "MERGE INTO db.g AS t USING staging.gs AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET x = s.x "
+        "WHEN NOT MATCHED AND s.d <> 0 "
+        "THEN INSERT VALUES (s.k, s.x / s.d, CAST(s.v AS INT)) "
+        "WHEN NOT MATCHED BY SOURCE AND t.d <> 0 THEN UPDATE SET x = t.x / t.d"
+    )
+    got = sorted((r.k, r.x, r.d) for r in s.sql("SELECT * FROM db.g").collect())
+    assert got == [(1, 7, 0), (2, 9, 5), (3, 30, 0), (4, 10, 4), (6, 20, 2)]
