@@ -72,16 +72,17 @@ def main() -> None:
     # ran before it) from host noise. Additions-only: the default
     # stays the sorted order the driver compares across rounds, and
     # the one-line JSON contract is unchanged. Shuffle is seeded per
-    # (seed, pass-label) so a run is reproducible.
+    # (seed, pass-label) so a run is reproducible; each pass's meta
+    # records the seed and the order that ran.
     order_mode = os.environ.get("SPARK_GRAFT_BENCH_ORDER", "sorted")
+    order_seed = os.environ.get("SPARK_GRAFT_BENCH_SEED", "0")
 
     def _pass_order(label: str) -> list[str]:
         names = sorted(qs)
         if order_mode == "random":
             import random
 
-            seed = os.environ.get("SPARK_GRAFT_BENCH_SEED", "0")
-            random.Random(f"{seed}:{label}").shuffle(names)
+            random.Random(f"{order_seed}:{label}").shuffle(names)
         return names
 
     def run_pass(label: str) -> dict[str, float]:
@@ -91,8 +92,12 @@ def main() -> None:
             "loadavg_before": _loadavg(),
             "order": order_mode,
         }
+        names = _pass_order(label)
+        if order_mode == "random":
+            meta["seed"] = order_seed
+            meta["ran"] = names
         timings: dict[str, float] = {}
-        for name in _pass_order(label):
+        for name in names:
             t0 = time.perf_counter()
             try:
                 df = qs[name](spark, sf_dir)

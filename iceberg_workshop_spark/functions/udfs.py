@@ -157,12 +157,11 @@ def q_udtf_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for w in text.split(" "):
                     yield doc_id, w
 
-    docs = load(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("iws_docs_udtf")
     spark.udtf.register("iws_word_splitter", WordSplitter)
     return spark.sql(
-        "SELECT s.doc_id, s.word FROM iws_docs_udtf d, "
-        "LATERAL iws_word_splitter(d.doc_id, d.text) s"
+        "SELECT s.doc_id, s.word FROM {docs} d, "
+        "LATERAL iws_word_splitter(d.doc_id, d.text) s",
+        docs=load(spark, sf_dir, "documents"),
     ).orderBy("doc_id", "word")
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl.pruning import Pred, prune_files
 from iceberg_workshop_spark.icetbl.table import IceTable, _pred_to_column
+from iceberg_workshop_spark.session import staged
 
 
 def _norm_path(spark_file_path: str) -> str:
@@ -615,8 +616,8 @@ def merge(
             "files_untouched": len(files) - len(affected),
         }
 
-    changed = rows.filter("__op IN ('update', 'delete', 'insert')").persist()
-    try:
+    with staged(tbl.spark) as st:
+        changed = st.persist(rows.filter("__op IN ('update', 'delete', 'insert')"))
         new_files = tbl._write_files(
             changed.filter("__op <> 'delete'").select(*cols), spec, spec_id
         )
@@ -629,8 +630,6 @@ def merge(
             )
         else:
             paths, n_pos, content = [], 0, None
-    finally:
-        changed.unpersist()
     entries = _pos_delete_entries(tbl, paths, n_pos, content) if n_pos else []
     tbl._commit_snapshot_delta(
         new_files,
@@ -1057,12 +1056,10 @@ def update_where_mor(
     files = tbl.meta.current_files()
     dels = _current_deletes(tbl)
     cols = tbl._column_names()
-    live = (
-        tbl._apply_deletes(files, dels, keep_pos=True)
-        .filter(condition)
-        .persist()
-    )
-    try:
+    with staged(tbl.spark) as st:
+        live = st.persist(
+            tbl._apply_deletes(files, dels, keep_pos=True).filter(condition)
+        )
         positions = live.select(
             F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
         )
@@ -1077,8 +1074,6 @@ def update_where_mor(
         paths, n_pos, content = _write_delete_sidecar(
             tbl, "posdel", positions.orderBy("file_path", "pos")
         )
-    finally:
-        live.unpersist()
     if n_pos == 0:
         # nothing matched: drop the empty sidecar-dir artifacts and
         # leave the table untouched (no empty commit)

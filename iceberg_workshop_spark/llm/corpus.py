@@ -26,7 +26,8 @@ from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.registry import guard_axis as _guard_axis
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.session import staged
+from iceberg_workshop_spark.sources.tables import fixture_sql, load
 
 # Shared DuckDB fragments (Spark sides use the equivalent built-ins).
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -301,39 +302,38 @@ def q_llm_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(docs.select("doc_id", "text")).join(
         docs.select("doc_id", "source"), "doc_id"
     )
-    ss = sh.select("source", "shingle").distinct().persist()
-    sz = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    a = ss.alias("a")
-    b = ss.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.source") < F.col("b.source")),
+    with staged(spark) as st:
+        ss = st.persist(sh.select("source", "shingle").distinct())
+        sz = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+        a = ss.alias("a")
+        b = ss.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.source") < F.col("b.source")),
+            )
+            .groupBy(
+                F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_shared"))
         )
-        .groupBy(
-            F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b")
+        out = (
+            inter.join(F.broadcast(sz).withColumnRenamed("source", "src_a"), "src_a")
+            .withColumnRenamed("n", "na")
+            .join(F.broadcast(sz).withColumnRenamed("source", "src_b"), "src_b")
+            .withColumnRenamed("n", "nb")
+            .selectExpr(
+                "src_a",
+                "src_b",
+                "n_shared",
+                "CAST(CAST(1000000 AS DECIMAL(38,0)) * n_shared"
+                " DIV LEAST(na, nb) AS BIGINT) AS overlap_ppm",
+            )
+            .orderBy(F.desc("overlap_ppm"), "src_a", "src_b")
+            .limit(20)
         )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    out = (
-        inter.join(F.broadcast(sz).withColumnRenamed("source", "src_a"), "src_a")
-        .withColumnRenamed("n", "na")
-        .join(F.broadcast(sz).withColumnRenamed("source", "src_b"), "src_b")
-        .withColumnRenamed("n", "nb")
-        .selectExpr(
-            "src_a",
-            "src_b",
-            "n_shared",
-            "CAST(CAST(1000000 AS DECIMAL(38,0)) * n_shared"
-            " DIV LEAST(na, nb) AS BIGINT) AS overlap_ppm",
-        )
-        .orderBy(F.desc("overlap_ppm"), "src_a", "src_b")
-        .limit(20)
-    )
-    out = out.localCheckpoint()
-    ss.unpersist()
-    return out
+        return out.localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -386,46 +386,45 @@ def q_llm_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the round-10 ppm discipline) — BIGINT would wrap at ~10^6
     target tokens; the per-doc SUM of BIGINT ratios that remains is
     bounded by doc_len · 1e6 · (n_all/n_tgt)."""
-    toks = _toks(spark, sf_dir).persist()
-    corpus = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_all"))
-    tgt = (
-        toks.filter(F.col("lang") == "en")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c_tgt"))
-    )
-    totals = toks.agg(
-        F.count(F.lit(1)).alias("n_all"),
-        F.count(F.when(F.col("lang") == "en", 1)).alias("n_tgt"),
-    )
-    ratio = (
-        corpus.join(tgt, "tok", "left")
-        .crossJoin(F.broadcast(totals))
-        .selectExpr(
-            "tok",
-            "CAST(CAST(1000000 AS DECIMAL(38,0)) * COALESCE(c_tgt, 0)"
-            " * n_all DIV (CAST(c_all AS DECIMAL(38,0)) * n_tgt)"
-            " AS BIGINT) AS ratio_ppm",
+    with staged(spark) as st:
+        toks = st.persist(_toks(spark, sf_dir))
+        corpus = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_all"))
+        tgt = (
+            toks.filter(F.col("lang") == "en")
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("c_tgt"))
         )
-    )
-    scored = (
-        toks.join(F.broadcast(ratio), "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.expr("CAST(SUM(ratio_ppm) DIV COUNT(*) AS BIGINT)").alias(
-                "score_ppm"
+        totals = toks.agg(
+            F.count(F.lit(1)).alias("n_all"),
+            F.count(F.when(F.col("lang") == "en", 1)).alias("n_tgt"),
+        )
+        ratio = (
+            corpus.join(tgt, "tok", "left")
+            .crossJoin(F.broadcast(totals))
+            .selectExpr(
+                "tok",
+                "CAST(CAST(1000000 AS DECIMAL(38,0)) * COALESCE(c_tgt, 0)"
+                " * n_all DIV (CAST(c_all AS DECIMAL(38,0)) * n_tgt)"
+                " AS BIGINT) AS ratio_ppm",
             )
         )
-    )
-    docs = load(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    out = (
-        scored.join(docs, "doc_id")
-        .select("doc_id", "source", "lang", "score_ppm")
-        .orderBy(F.desc("score_ppm"), "doc_id")
-        .limit(IMPORTANCE_TOP_K)
-    )
-    out = out.localCheckpoint()
-    toks.unpersist()
-    return out
+        scored = (
+            toks.join(F.broadcast(ratio), "tok")
+            .groupBy("doc_id")
+            .agg(
+                F.expr("CAST(SUM(ratio_ppm) DIV COUNT(*) AS BIGINT)").alias(
+                    "score_ppm"
+                )
+            )
+        )
+        docs = load(spark, sf_dir, "documents").select("doc_id", "source", "lang")
+        out = (
+            scored.join(docs, "doc_id")
+            .select("doc_id", "source", "lang", "score_ppm")
+            .orderBy(F.desc("score_ppm"), "doc_id")
+            .limit(IMPORTANCE_TOP_K)
+        )
+        return out.localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -520,36 +519,35 @@ def q_llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_workshop_spark.llm.dedup import _doc_shingles
 
     docs = load(spark, sf_dir, "documents")
-    ds = _doc_shingles(docs.select("doc_id", "text")).join(
-        docs.select("doc_id", "source"), "doc_id"
-    ).persist()
-    firsts = ds.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
-    per_doc = (
-        ds.join(firsts, "shingle")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.sum(
-                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
-            ).alias("n_novel"),
+    with staged(spark) as st:
+        ds = st.persist(_doc_shingles(docs.select("doc_id", "text")).join(
+            docs.select("doc_id", "source"), "doc_id"
+        ))
+        firsts = ds.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
+        per_doc = (
+            ds.join(firsts, "shingle")
+            .groupBy("doc_id", "source")
+            .agg(
+                F.count(F.lit(1)).alias("n_shingles"),
+                F.sum(
+                    F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
+                ).alias("n_novel"),
+            )
         )
-    )
-    out = (
-        per_doc.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_novel").alias("sum_novel"),
-            F.sum("n_shingles").alias("sum_shingles"),
-            F.expr(
-                "CAST(CAST(1000000 AS DECIMAL(38,0)) * SUM(n_novel)"
-                " DIV CAST(SUM(n_shingles) AS DECIMAL(38,0)) AS BIGINT)"
-            ).alias("novelty_ppm"),
+        out = (
+            per_doc.groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_novel").alias("sum_novel"),
+                F.sum("n_shingles").alias("sum_shingles"),
+                F.expr(
+                    "CAST(CAST(1000000 AS DECIMAL(38,0)) * SUM(n_novel)"
+                    " DIV CAST(SUM(n_shingles) AS DECIMAL(38,0)) AS BIGINT)"
+                ).alias("novelty_ppm"),
+            )
+            .orderBy("source")
         )
-        .orderBy("source")
-    )
-    out = out.localCheckpoint()
-    ds.unpersist()
-    return out
+        return out.localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -647,47 +645,46 @@ def q_llm_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional self-join WITHIN each document — banded by doc_id, so
     it shuffles each document once, never the corpus cross-product.
     Unigram counts broadcast back onto the pair table."""
-    toks = _toks(spark, sf_dir).select("doc_id", "tok", "pos").persist()
-    n = toks.agg(F.count(F.lit(1)).alias("n_toks"))
-    uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("b.pos") >= F.col("a.pos") + 1)
-            & (F.col("b.pos") <= F.col("a.pos") + PMI_WINDOW)
-            & (F.col("a.tok") != F.col("b.tok")),
+    with staged(spark) as st:
+        toks = st.persist(_toks(spark, sf_dir).select("doc_id", "tok", "pos"))
+        n = toks.agg(F.count(F.lit(1)).alias("n_toks"))
+        uni = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
+        a = toks.alias("a")
+        b = toks.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.doc_id") == F.col("b.doc_id"))
+                & (F.col("b.pos") >= F.col("a.pos") + 1)
+                & (F.col("b.pos") <= F.col("a.pos") + PMI_WINDOW)
+                & (F.col("a.tok") != F.col("b.tok")),
+            )
+            .select(
+                F.least(F.col("a.tok"), F.col("b.tok")).alias("w1"),
+                F.greatest(F.col("a.tok"), F.col("b.tok")).alias("w2"),
+            )
+            .groupBy("w1", "w2")
+            .agg(F.count(F.lit(1)).alias("c12"))
+            .filter(F.col("c12") >= PMI_MIN_PAIRS)
         )
-        .select(
-            F.least(F.col("a.tok"), F.col("b.tok")).alias("w1"),
-            F.greatest(F.col("a.tok"), F.col("b.tok")).alias("w2"),
+        out = (
+            pairs.join(
+                F.broadcast(uni.withColumnRenamed("tok", "w1")), "w1"
+            )
+            .withColumnRenamed("c", "c1")
+            .join(F.broadcast(uni.withColumnRenamed("tok", "w2")), "w2")
+            .withColumnRenamed("c", "c2")
+            .crossJoin(F.broadcast(n))
+            .selectExpr(
+                "w1",
+                "w2",
+                "c12",
+                "CAST(1000 * c12 * n_toks DIV (c1 * c2) AS BIGINT) AS lift_x1000",
+            )
+            .orderBy(F.desc("lift_x1000"), "w1", "w2")
+            .limit(PMI_TOP)
         )
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .filter(F.col("c12") >= PMI_MIN_PAIRS)
-    )
-    out = (
-        pairs.join(
-            F.broadcast(uni.withColumnRenamed("tok", "w1")), "w1"
-        )
-        .withColumnRenamed("c", "c1")
-        .join(F.broadcast(uni.withColumnRenamed("tok", "w2")), "w2")
-        .withColumnRenamed("c", "c2")
-        .crossJoin(F.broadcast(n))
-        .selectExpr(
-            "w1",
-            "w2",
-            "c12",
-            "CAST(1000 * c12 * n_toks DIV (c1 * c2) AS BIGINT) AS lift_x1000",
-        )
-        .orderBy(F.desc("lift_x1000"), "w1", "w2")
-        .limit(PMI_TOP)
-    )
-    out = out.localCheckpoint()
-    toks.unpersist()
-    return out
+        return out.localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -821,9 +818,6 @@ def q_llm_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     8 KB-word filter broadcasts to every executor, and only
     bloom-positive docs proceed to the exact semi-join
     (q_llm_dedup_incremental)."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView(
-        "iws_corpus_documents"
-    )
     spark_toks_cte = """
     toks AS (
       SELECT doc_id, tok, pos0 + 1 AS pos
@@ -831,11 +825,13 @@ def q_llm_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                posexplode(split(trim(regexp_replace(lower(text), '\\\\s+', ' ')),
                                 ' ')) AS (pos0, tok)
-        FROM iws_corpus_documents
+        FROM {documents}
       )
     )
 """
-    return spark.sql(_bloom_screen_sql(_BF_HEX_SPARK, " div ", spark_toks_cte))
+    return fixture_sql(
+        spark, sf_dir, _bloom_screen_sql(_BF_HEX_SPARK, " div ", spark_toks_cte)
+    )
 
 
 # -------------------------------------------------- distribution drift

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 # PCRE/RE2-common subset: no lookaround, no backrefs — identical
 # semantics under Java regex (Spark) and RE2 (DuckDB).
@@ -433,7 +433,7 @@ WITH norm AS (
            AS toks,
          md5(trim(regexp_replace(lower(text), '{ws}', ' '{gflag})))
            AS fingerprint
-  FROM {{t}}documents
+  FROM {{documents}}
 ),
 sized AS (
   SELECT doc_id, lang, fingerprint,
@@ -474,7 +474,7 @@ ORDER BY lang, pack_id
 @register(
     "q_llm_pipeline_e2e",
     oracle=_pipeline_sql("//", ", 'g'", "length(list_distinct(toks))",
-                         "string_split", "length", r"\s+").format(t=""),
+                         "string_split", "length", r"\s+").format(**FIXTURE_VIEWS),
 )
 def q_llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation pipeline end to end, as ONE declarative plan:
@@ -485,10 +485,11 @@ def q_llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for the dedup window, one for the per-lang prefix sum —
     the pipeline a 100 TB pretraining run executes nightly, here as a
     single query with an exact cross-engine oracle."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("iws_cur_documents")
-    return spark.sql(
+    return fixture_sql(
+        spark,
+        sf_dir,
         _pipeline_sql(" div ", "", "size(array_distinct(toks))",
-                      "split", "size", r"\\s+").format(t="iws_cur_")
+                      "split", "size", r"\\s+"),
     )
 
 
@@ -608,7 +609,7 @@ WITH scored AS (
          ({arr_len}({split_fn}(trim(text), ' ')) * 1000)
            {intdiv} {arr_len}({distinct_fn}({split_fn}(trim(text), ' ')))
            AS verbosity_score
-  FROM {t}documents
+  FROM {documents}
 ),
 bucketed AS (
   SELECT doc_id, source, verbosity_score,
@@ -629,7 +630,7 @@ ORDER BY stage
 @register(
     "q_llm_curriculum",
     oracle=_CURRICULUM.format(
-        t="", intdiv="//", split_fn="string_split",
+        **FIXTURE_VIEWS, intdiv="//", split_fn="string_split",
         arr_len="length", distinct_fn="list_distinct",
     ),
 )

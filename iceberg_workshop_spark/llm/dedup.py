@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.registry import QUERIES, register, require
+from iceberg_workshop_spark.session import staged
 from iceberg_workshop_spark.sources.tables import load
 
 # Near-dup thresholds (fixture has 25 seeded pairs at Jaccard ≈ .98;
@@ -103,7 +104,7 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
 def _pair_jaccard(
     shingles: DataFrame,
     candidates: DataFrame | None = None,
-    releases: list | None = None,
+    st: staged | None = None,
 ) -> DataFrame:
     """Exact Jaccard per doc pair from a (doc_id, shingle) set table.
 
@@ -123,20 +124,24 @@ def _pair_jaccard(
     (guide §2.3 — shuffle metadata/arrays once, not one row per
     element). ``n_common = 0`` rows are filtered to keep the old
     inner-join row set. Precondition: ``candidates`` must be DISTINCT
-    (doc_a, doc_b) pairs.
+    (doc_a, doc_b) pairs. With ``st``, the per-doc set table is
+    persisted in the caller's stage. Width bound: a doc's array row
+    holds all its distinct shingles (at most one three-word string per
+    word), so the widest row grows linearly with the longest document
+    and is held whole in executor memory; a corpus with
+    multi-megabyte documents should split them into segments first.
     """
     if candidates is not None:
         sets = shingles.groupBy("doc_id").agg(
             F.collect_list("shingle").alias("sh"),
             F.count(F.lit(1)).alias("n"),
         )
-        if releases is not None:
+        if st is not None:
             # both join sides read sets; persist so the collect_list
             # agg runs once (measured 7.5 s → 3.4 s whole-query on the
             # containment twin when sets AND candidates are persisted
-            # vs recomputed per broadcast build). Caller releases.
-            sets = sets.persist()
-            releases.append(sets)
+            # vs recomputed per broadcast build).
+            sets = st.persist(sets)
         sa = sets.select(
             F.col("doc_id").alias("doc_a"),
             F.col("sh").alias("sh_a"),
@@ -303,17 +308,14 @@ def q_llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # Three consumers (sizes + both join sides) — persist so the
     # tokenize/shingle/distinct pipeline runs once; checkpoint the
-    # result and release (persists are invocation-scoped — returned
-    # lazy, the shingle cache stayed registered for the session and
-    # later invocations silently reused this run's blocks).
-    shingles = _doc_shingles(docs).persist()
-    pairs = _pair_jaccard(shingles)
-    out = pairs.filter(
-        F.col("n_common") / F.col("n_union") >= JACCARD_T
-    ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    shingles.unpersist()
-    return out
+    # result before the stage unpersists the shingles.
+    with staged(spark) as st:
+        shingles = st.persist(_doc_shingles(docs))
+        pairs = _pair_jaccard(shingles)
+        out = pairs.filter(
+            F.col("n_common") / F.col("n_union") >= JACCARD_T
+        ).orderBy("doc_a", "doc_b")
+        return out.localCheckpoint(eager=True)
 
 
 def _certify_pairs(
@@ -410,42 +412,38 @@ def q_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verification, and each candidate set feeds a semi-join — persist
     # all three (tiny: one row per (doc, shingle) / per pair) so the
     # LSH DAG is evaluated once, not once per consumer.
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
-    # Certificate (rows-only gate hardening): replay the exact md5
-    # permutation family (q_llm_dedup_near's engine-portable twin) on
-    # the same shingles and pin recall/precision of the xxhash64 pair
-    # set against it — 1.0/1.0 at these parameters, asserted ≥ 0.99.
-    # Both families' signatures come out of ONE fused Python pass
-    # (xxhash64 base folded to 28 bits so the shared permutation
-    # family's a*base+b stays < 2^50, int64-exact); both candidate
-    # sets overlap almost completely, so exact-Jaccard verification
-    # runs ONCE over their union and each family's verified pairs
-    # come back out via a cheap semi-join.
-    bands = _minhash_bands_multi(
-        shingles,
-        {
-            "bxx": F.expr("xxhash64(shingle) & 268435455"),
-            "bmd5": F.expr(_MD5_BASE_COL),
-        },
-        releases,
-    )
-    candidates = _band_pairs(bands["bxx"], materialize=False).persist()
-    exact_cand = _band_pairs(bands["bmd5"], materialize=False).persist()
-    # all_cand has exactly one consumer (the verify) — no persist.
-    all_cand = candidates.unionAll(exact_cand).distinct()
-    verified = (
-        _pair_jaccard(shingles, all_cand, releases)
-        .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
-        .persist()
-    )
-    fast = verified.join(candidates, ["doc_a", "doc_b"], "left_semi")
-    exact = verified.join(exact_cand, ["doc_a", "doc_b"], "left_semi")
-    out = _certify_pairs(fast, exact, 0.99, 0.99).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, candidates, exact_cand, verified, *releases):
-        df.unpersist()
-    return out
+    with staged(spark) as st:
+        shingles = st.persist(_doc_shingles(docs))
+        # Certificate (rows-only gate hardening): replay the exact md5
+        # permutation family (q_llm_dedup_near's engine-portable twin) on
+        # the same shingles and pin recall/precision of the xxhash64 pair
+        # set against it — 1.0/1.0 at these parameters, asserted ≥ 0.99.
+        # Both families' signatures come out of ONE fused Python pass
+        # (xxhash64 base folded to 28 bits so the shared permutation
+        # family's a*base+b stays < 2^50, int64-exact); both candidate
+        # sets overlap almost completely, so exact-Jaccard verification
+        # runs ONCE over their union and each family's verified pairs
+        # come back out via a cheap semi-join.
+        bands = _minhash_bands_multi(
+            shingles,
+            {
+                "bxx": F.expr("xxhash64(shingle) & 268435455"),
+                "bmd5": F.expr(_MD5_BASE_COL),
+            },
+            st,
+        )
+        candidates = st.persist(_band_pairs(bands["bxx"]))
+        exact_cand = st.persist(_band_pairs(bands["bmd5"]))
+        # all_cand has exactly one consumer (the verify) — no persist.
+        all_cand = candidates.unionAll(exact_cand).distinct()
+        verified = st.persist(
+            _pair_jaccard(shingles, all_cand, st)
+            .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
+        )
+        fast = verified.join(candidates, ["doc_a", "doc_b"], "left_semi")
+        exact = verified.join(exact_cand, ["doc_a", "doc_b"], "left_semi")
+        out = _certify_pairs(fast, exact, 0.99, 0.99).orderBy("doc_a", "doc_b")
+        return out.localCheckpoint(eager=True)
 
 
 # DuckDB-side hex→int over the first 15 md5 nibbles (60 bits, fits
@@ -604,7 +602,7 @@ def _minhash_bands(shingles: DataFrame, base: Column) -> DataFrame:
 
 
 def _minhash_bands_multi(
-    shingles: DataFrame, bases: dict[str, Column], releases: list
+    shingles: DataFrame, bases: dict[str, Column], st: staged
 ) -> dict[str, DataFrame]:
     """(doc_id, band_id, sig) band tables for SEVERAL base-hash
     families in ONE Python pass (guide §4.1 — cross the JVM↔Python
@@ -616,7 +614,7 @@ def _minhash_bands_multi(
     constants, so the per-batch numpy work just stacks one extra
     column set; per-family minima are bit-identical to the
     single-family helper (same int64 ops, min is order-free). The
-    merged signature frame is persisted (appended to ``releases``) and
+    merged signature frame is persisted in ``st`` and
     each family's band table is a cheap slice/explode over it."""
     import numpy as np
     import pandas as pd
@@ -661,10 +659,9 @@ def _minhash_bands_multi(
         f" array_repeat({_MINHASH_P}L, {MINHASH_PERMS}),"
         " (acc, x) -> zip_with(acc, x, (p, q) -> least(p, q)))"
     )
-    final = partials.groupBy("doc_id").agg(
+    final = st.persist(partials.groupBy("doc_id").agg(
         *[F.expr(merge.format(nm=nm)).alias(nm) for nm in names]
-    ).persist()
-    releases.append(final)
+    ))
     rows_per_band = MINHASH_PERMS // MINHASH_BANDS
     return {
         nm: final.select(
@@ -682,15 +679,11 @@ def _minhash_bands_multi(
     }
 
 
-def _band_pairs(
-    buckets: DataFrame,
-    releases: list | None = None,
-    materialize: bool = True,
-) -> DataFrame:
+def _band_pairs(buckets: DataFrame, st: staged | None = None) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) from band signatures:
     the LSH bucket self-join — shuffles only (band, sig, doc_id).
 
-    ``buckets`` is persisted: the self-join's build side gets
+    ``buckets`` is persisted in ``st``: the self-join's build side gets
     BROADCAST (band tables are tiny), and a broadcast build is a
     separate evaluation of its subtree — unmaterialized, the whole
     signature pipeline (the repartition + Arrow mapInPandas minima
@@ -701,18 +694,15 @@ def _band_pairs(
     call, serializing the query into sequential jobs (driver host:
     minhash ×1.25, clusters ×1.32 SLOWER; 32c/8c scaling ratio ~1.04),
     while a persist materializes once inside the caller's single final
-    action with stage overlap intact. Callers pass ``releases`` and
-    unpersist after that action — persists are invocation-scoped.
-    ``materialize=False`` skips the persist when the caller's buckets
-    are already a cheap projection of a cached frame
-    (_minhash_bands_multi) — re-deriving the explode per join side is
-    noise, while every extra cached frame adds stage-scheduling fixed
-    cost (the query is a ~34-job swarm of ≤0.15 s stages at sf0.1).
+    action with stage overlap intact. Without ``st`` nothing is
+    persisted: that is for buckets that are already a cheap projection
+    of a cached frame (_minhash_bands_multi) — re-deriving the explode
+    per join side is noise, while every extra cached frame adds
+    stage-scheduling fixed cost (the query is a ~34-job swarm of
+    ≤0.15 s stages at sf0.1).
     """
-    if materialize:
-        buckets = buckets.persist()
-        if releases is not None:
-            releases.append(buckets)
+    if st is not None:
+        buckets = st.persist(buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -733,7 +723,7 @@ _MD5_BASE_COL = "cast(conv(substring(md5(shingle), 1, 7), 16, 10) as bigint)"
 
 
 def _minhash_candidates(
-    shingles: DataFrame, releases: list | None = None
+    shingles: DataFrame, st: staged | None = None
 ) -> DataFrame:
     """Banded MinHash candidate pairs (doc_a < doc_b) over a
     (doc_id, shingle) table — the exact md5-base linear-permutation
@@ -743,7 +733,7 @@ def _minhash_candidates(
     the unblocked shingle self-join (whose pair count is Σ df(shingle)²
     — boilerplate-heavy corpora explode it at 100 TB)."""
     return _band_pairs(
-        _minhash_bands(shingles, F.expr(_MD5_BASE_COL)), releases
+        _minhash_bands(shingles, F.expr(_MD5_BASE_COL)), st
     )
 
 
@@ -774,17 +764,14 @@ def q_llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutation) keeps this within ~2× of the xxhash64 hot path.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
-    candidates = _minhash_candidates(shingles, releases).persist()
-    verified = _pair_jaccard(shingles, candidates, releases)
-    out = verified.filter(
-        F.col("n_common") / F.col("n_union") >= JACCARD_T
-    ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, candidates, *releases):
-        df.unpersist()
-    return out
+    with staged(spark) as st:
+        shingles = st.persist(_doc_shingles(docs))
+        candidates = st.persist(_minhash_candidates(shingles, st))
+        verified = _pair_jaccard(shingles, candidates, st)
+        out = verified.filter(
+            F.col("n_common") / F.col("n_union") >= JACCARD_T
+        ).orderBy("doc_a", "doc_b")
+        return out.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------- SimHash
@@ -842,153 +829,151 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # shingles feed the fingerprint votes AND the certificate's exact
     # ground-truth pass — persist so tokenization runs once
-    docs_shingles = _doc_shingles(docs).persist()
-    toks = docs_shingles.select("doc_id", F.xxhash64("shingle").alias("h"))
-    # fp feeds the bucket explode and both sides of the verify join —
-    # persist (one 9-column row per doc) to evaluate the vote agg once.
-    # Votes via Arrow-batched numpy shift-and-mask partials (the same
-    # partial-then-merge shape as _minhash_bands; see the md5-exact
-    # variant for the measurement). (x >> j) & 1 extracts bit j under
-    # arithmetic and logical shift alike, so bit 63 stays usable.
-    import numpy as np
-    import pandas as pd
+    with staged(spark) as st:
+        docs_shingles = st.persist(_doc_shingles(docs))
+        toks = docs_shingles.select("doc_id", F.xxhash64("shingle").alias("h"))
+        # fp feeds the bucket explode and both sides of the verify join —
+        # persist (one 9-column row per doc) to evaluate the vote agg once.
+        # Votes via Arrow-batched numpy shift-and-mask partials (the same
+        # partial-then-merge shape as _minhash_bands; see the md5-exact
+        # variant for the measurement). (x >> j) & 1 extracts bit j under
+        # arithmetic and logical shift alike, so bit 63 stays usable.
+        import numpy as np
+        import pandas as pd
 
-    def _partial_votes(batches):
-        shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            H = pdf["h"].to_numpy(dtype=np.int64)
-            bits = ((H[:, None] >> shifts[None, :]) & 1) * 2 - 1
-            g = pd.DataFrame(bits)
-            g["doc_id"] = pdf["doc_id"].to_numpy()
-            m = g.groupby("doc_id", sort=False).sum()
-            yield pd.DataFrame(
-                {"doc_id": m.index.to_numpy(), "vs": list(m.to_numpy())}
+        def _partial_votes(batches):
+            shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                H = pdf["h"].to_numpy(dtype=np.int64)
+                bits = ((H[:, None] >> shifts[None, :]) & 1) * 2 - 1
+                g = pd.DataFrame(bits)
+                g["doc_id"] = pdf["doc_id"].to_numpy()
+                m = g.groupby("doc_id", sort=False).sum()
+                yield pd.DataFrame(
+                    {"doc_id": m.index.to_numpy(), "vs": list(m.to_numpy())}
+                )
+
+        partials = toks.repartition("doc_id").mapInPandas(
+            _partial_votes, "doc_id long, vs array<long>"
+        )
+        votes = partials.groupBy("doc_id").agg(
+            F.expr(
+                f"aggregate(collect_list(vs), array_repeat(0L, {SIMHASH_BITS}),"
+                " (acc, x) -> zip_with(acc, x, (p, q) -> p + q))"
+            ).alias("vs")
+        )
+        bits_per_band = SIMHASH_BITS // SIMHASH_BANDS
+        chunk_cols = [
+            F.expr(
+                f"aggregate(sequence(0, {bits_per_band - 1}), 0L, (acc, j) ->"
+                f" acc + if(element_at(vs, {c * bits_per_band} + j + 1) > 0,"
+                " shiftleft(1L, j), 0L))"
+            ).alias(f"c{c}")
+            for c in range(SIMHASH_BANDS)
+        ]
+        fp = st.persist(votes.select("doc_id", *chunk_cols))
+        # Combination keys (module constants above): block b's value is a
+        # contiguous bit slice of the fingerprint; combo key k packs its 3
+        # block values into one long (7 bits per slot covers both widths).
+        from itertools import combinations as _combos
+
+        offs = []
+        pos = 0
+        for w in SIMHASH_BLOCK_WIDTHS:
+            offs.append((pos, w))
+            pos += w
+        # full fingerprint as one long, rebuilt from the 8 storage chunks
+        bits_pb = SIMHASH_BITS // SIMHASH_BANDS
+        fp_long = sum(
+            (
+                F.shiftleft(F.col(f"c{c}"), c * bits_pb)
+                for c in range(1, SIMHASH_BANDS)
+            ),
+            start=F.col("c0"),
+        )
+        fpl = fp.withColumn("fpl", fp_long)
+
+        def _block(i: int) -> F.Column:
+            off, w = offs[i]
+            return F.shiftrightunsigned(F.col("fpl"), off).bitwiseAND(
+                F.lit((1 << w) - 1)
             )
 
-    partials = toks.repartition("doc_id").mapInPandas(
-        _partial_votes, "doc_id long, vs array<long>"
-    )
-    votes = partials.groupBy("doc_id").agg(
-        F.expr(
-            f"aggregate(collect_list(vs), array_repeat(0L, {SIMHASH_BITS}),"
-            " (acc, x) -> zip_with(acc, x, (p, q) -> p + q))"
-        ).alias("vs")
-    )
-    bits_per_band = SIMHASH_BITS // SIMHASH_BANDS
-    chunk_cols = [
-        F.expr(
-            f"aggregate(sequence(0, {bits_per_band - 1}), 0L, (acc, j) ->"
-            f" acc + if(element_at(vs, {c * bits_per_band} + j + 1) > 0,"
-            " shiftleft(1L, j), 0L))"
-        ).alias(f"c{c}")
-        for c in range(SIMHASH_BANDS)
-    ]
-    fp = votes.select("doc_id", *chunk_cols).persist()
-    # Combination keys (module constants above): block b's value is a
-    # contiguous bit slice of the fingerprint; combo key k packs its 3
-    # block values into one long (7 bits per slot covers both widths).
-    from itertools import combinations as _combos
-
-    offs = []
-    pos = 0
-    for w in SIMHASH_BLOCK_WIDTHS:
-        offs.append((pos, w))
-        pos += w
-    # full fingerprint as one long, rebuilt from the 8 storage chunks
-    bits_pb = SIMHASH_BITS // SIMHASH_BANDS
-    fp_long = sum(
-        (
-            F.shiftleft(F.col(f"c{c}"), c * bits_pb)
-            for c in range(1, SIMHASH_BANDS)
-        ),
-        start=F.col("c0"),
-    )
-    fpl = fp.withColumn("fpl", fp_long)
-
-    def _block(i: int) -> F.Column:
-        off, w = offs[i]
-        return F.shiftrightunsigned(F.col("fpl"), off).bitwiseAND(
-            F.lit((1 << w) - 1)
+        combo_keys = [
+            sum(
+                (_block(blk) * F.lit(1 << (8 * slot))
+                 for slot, blk in enumerate(combo)),
+                start=F.lit(0),
+            )
+            for combo in _combos(range(len(SIMHASH_BLOCK_WIDTHS)), SIMHASH_COMBO)
+        ]
+        buckets = fpl.select(
+            "doc_id",
+            F.posexplode(F.array(*combo_keys)).alias("band_id", "chunk"),
         )
-
-    combo_keys = [
-        sum(
-            (_block(blk) * F.lit(1 << (8 * slot))
-             for slot, blk in enumerate(combo)),
+        a = buckets.alias("a")
+        b = buckets.alias("b")
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.band_id") == F.col("b.band_id"))
+                & (F.col("a.chunk") == F.col("b.chunk"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .distinct()
+        )
+        fa = fp.select(
+            F.col("doc_id").alias("doc_a"),
+            *[F.col(f"c{c}").alias(f"a{c}") for c in range(SIMHASH_BANDS)],
+        )
+        fb = fp.select(
+            F.col("doc_id").alias("doc_b"),
+            *[F.col(f"c{c}").alias(f"b{c}") for c in range(SIMHASH_BANDS)],
+        )
+        hamming = sum(
+            (
+                F.bit_count(F.col(f"a{c}").bitwiseXOR(F.col(f"b{c}")))
+                for c in range(SIMHASH_BANDS)
+            ),
             start=F.lit(0),
         )
-        for combo in _combos(range(len(SIMHASH_BLOCK_WIDTHS)), SIMHASH_COMBO)
-    ]
-    buckets = fpl.select(
-        "doc_id",
-        F.posexplode(F.array(*combo_keys)).alias("band_id", "chunk"),
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        fast = (
+            candidates.join(fa, "doc_a")
+            .join(fb, "doc_b")
+            .select("doc_a", "doc_b", hamming.alias("hamming"))
+            .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        # Certificate (rows-only gate hardening): pin the fingerprint
+        # family against the exact all-pairs Jaccard ground truth —
+        # SimHash at radius 7 legitimately misses a recall tail (asserted
+        # ≥ 0.8, the bar test_llm.py pins) but must report no false pair
+        # (precision 1.0). At corpus scale the truth pass would be
+        # sampled (or banded à la _minhash_candidates, measured slower at
+        # fixture scale); at certificate scale it is the same
+        # Σ df(shingle)² shingle self-join the exact q_llm_dedup_ngram
+        # entry runs.
+        cert_sh, cert_docs = _cert_shingles(docs_shingles)
+        truth = _pair_jaccard(cert_sh).filter(
+            F.col("n_common") / F.col("n_union") >= JACCARD_T
         )
-        .distinct()
-    )
-    fa = fp.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"c{c}").alias(f"a{c}") for c in range(SIMHASH_BANDS)],
-    )
-    fb = fp.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"c{c}").alias(f"b{c}") for c in range(SIMHASH_BANDS)],
-    )
-    hamming = sum(
-        (
-            F.bit_count(F.col(f"a{c}").bitwiseXOR(F.col(f"b{c}")))
-            for c in range(SIMHASH_BANDS)
-        ),
-        start=F.lit(0),
-    )
-    fast = (
-        candidates.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-    )
-    # Certificate (rows-only gate hardening): pin the fingerprint
-    # family against the exact all-pairs Jaccard ground truth —
-    # SimHash at radius 7 legitimately misses a recall tail (asserted
-    # ≥ 0.8, the bar test_llm.py pins) but must report no false pair
-    # (precision 1.0). At corpus scale the truth pass would be
-    # sampled (or banded à la _minhash_candidates, measured slower at
-    # fixture scale); at certificate scale it is the same
-    # Σ df(shingle)² shingle self-join the exact q_llm_dedup_ngram
-    # entry runs.
-    cert_sh, cert_docs = _cert_shingles(docs_shingles)
-    truth = _pair_jaccard(cert_sh).filter(
-        F.col("n_common") / F.col("n_union") >= JACCARD_T
-    )
-    fast_cert = fast
-    if cert_docs is not None:
-        # compare like with like: restrict the fast pairs to sampled
-        # endpoints so precision doesn't count out-of-sample pairs as
-        # spurious
-        d = F.broadcast(cert_docs)
-        fast_cert = fast.join(
-            d.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
-        ).join(d.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
-    out = _certify_pairs(
-        fast_cert, truth, 0.8, 0.999, output=fast
-    ).orderBy("doc_a", "doc_b")
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    docs_shingles.unpersist()
-    return out
+        fast_cert = fast
+        if cert_docs is not None:
+            # compare like with like: restrict the fast pairs to sampled
+            # endpoints so precision doesn't count out-of-sample pairs as
+            # spurious
+            d = F.broadcast(cert_docs)
+            fast_cert = fast.join(
+                d.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
+            ).join(d.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
+        out = _certify_pairs(
+            fast_cert, truth, 0.8, 0.999, output=fast
+        ).orderBy("doc_a", "doc_b")
+        return out.localCheckpoint(eager=True)
 
 
 SIMHASH_MD5_BITS = 60  # first 15 md5 nibbles → BIGINT-safe
@@ -1088,52 +1073,51 @@ def q_llm_dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"c{c}")
         for c in range(SIMHASH_MD5_BANDS)
     ]
-    fp = votes.select("doc_id", *chunk_cols).persist()
-    buckets = fp.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"c{c}") for c in range(SIMHASH_MD5_BANDS)])
-        ).alias("band_id", "chunk"),
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with staged(spark) as st:
+        fp = st.persist(votes.select("doc_id", *chunk_cols))
+        buckets = fp.select(
+            "doc_id",
+            F.posexplode(
+                F.array(*[F.col(f"c{c}") for c in range(SIMHASH_MD5_BANDS)])
+            ).alias("band_id", "chunk"),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        a = buckets.alias("a")
+        b = buckets.alias("b")
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.band_id") == F.col("b.band_id"))
+                & (F.col("a.chunk") == F.col("b.chunk"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    fa = fp.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"c{c}").alias(f"a{c}") for c in range(SIMHASH_MD5_BANDS)],
-    )
-    fb = fp.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"c{c}").alias(f"b{c}") for c in range(SIMHASH_MD5_BANDS)],
-    )
-    hamming = sum(
-        (
-            F.bit_count(F.col(f"a{c}").bitwiseXOR(F.col(f"b{c}")))
-            for c in range(SIMHASH_MD5_BANDS)
-        ),
-        start=F.lit(0),
-    )
-    out = (
-        candidates.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    return out
+        fa = fp.select(
+            F.col("doc_id").alias("doc_a"),
+            *[F.col(f"c{c}").alias(f"a{c}") for c in range(SIMHASH_MD5_BANDS)],
+        )
+        fb = fp.select(
+            F.col("doc_id").alias("doc_b"),
+            *[F.col(f"c{c}").alias(f"b{c}") for c in range(SIMHASH_MD5_BANDS)],
+        )
+        hamming = sum(
+            (
+                F.bit_count(F.col(f"a{c}").bitwiseXOR(F.col(f"b{c}")))
+                for c in range(SIMHASH_MD5_BANDS)
+            ),
+            start=F.lit(0),
+        )
+        out = (
+            candidates.join(fa, "doc_a")
+            .join(fb, "doc_b")
+            .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+            .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
+            .orderBy("doc_a", "doc_b")
+        )
+        return out.localCheckpoint(eager=True)
 
 
 # ------------------------------------------------- embedding-cosine dup
@@ -1451,31 +1435,22 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding, so cluster membership stays bit-identical.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    releases: list = []
-    shingles = _doc_shingles(docs).persist()
-    candidates = _minhash_candidates(shingles, releases).persist()
-    pairs = (
-        _pair_jaccard(shingles, candidates, releases)
-        .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    # Persist hygiene: the shingle→pair intermediates exist only to
-    # serve the propagation loop — leaving them persisted would grow
-    # executor memory monotonically across invocations in a long-lived
-    # session. The converged labels are already checkpointed (their
-    # plan references no persisted chain), so release everything —
-    # INCLUDING on the non-convergence require() raise (try/finally),
-    # or a failing run would leak three corpus-scale cached frames.
-    try:
-        final = _cc_min_label(pairs)
-    finally:
-        for df in (shingles, candidates, pairs, *releases):
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — cleanup must not fail the query
-                pass
-    return final.orderBy("doc_id")
+    # The shingle→pair intermediates exist only to serve the
+    # propagation loop; the converged labels are checkpointed (their
+    # plan references no persisted chain), so the stage unpersists them
+    # all, also on the non-convergence require() raise.
+    with staged(spark) as st:
+        shingles = st.persist(_doc_shingles(docs))
+        candidates = st.persist(_minhash_candidates(shingles, st))
+        pairs = st.persist(
+            _pair_jaccard(shingles, candidates, st)
+            .filter(F.col("n_common") / F.col("n_union") >= JACCARD_T)
+            .select("doc_a", "doc_b")
+        )
+        return _cc_min_label(pairs).orderBy("doc_id")
+
+
+CC_SHUFFLE_PARTITIONS = "8"  # label-propagation shuffle width
 
 
 def _cc_min_label(pairs: DataFrame) -> DataFrame:
@@ -1524,18 +1499,12 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
     # partition stage costs, which at the batch default of 32 dominate
     # wall clock on a near-dup-sized edge set (same reasoning as the
     # streaming drain's state-store partitioning, streaming/stateful).
-    # Env-tunable for a truly huge duplicate graph.
     import os as _os
 
-    sess = pairs.sparkSession
-    shuffle_key = "spark.sql.shuffle.partitions"
-    prev_parts = sess.conf.get(shuffle_key)
-    sess.conf.set(
-        shuffle_key, _os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "8")
-    )
     max_iters = int(_os.environ.get("SPARK_GRAFT_CC_MAX_ITERS", "64"))
     converged = False
-    try:
+    with staged(pairs.sparkSession) as st:
+        st.conf("spark.sql.shuffle.partitions", CC_SHUFFLE_PARTITIONS)
         # Labels are monotone non-increasing (least of self and
         # neighbor min), so sum(cluster_id) strictly decreases on any
         # change — convergence detection is one cheap aggregate per
@@ -1565,8 +1534,6 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
             "diameter > SPARK_GRAFT_CC_MAX_ITERS; raise the cap rather "
             "than accept partially-merged clusters",
         )
-    finally:
-        sess.conf.set(shuffle_key, prev_parts)
     return labels
 
 
@@ -1670,64 +1637,57 @@ def q_llm_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality check proves on every run. Prefix length uses integer
     ceiling arithmetic (``(4n+4) div 5``), no float at the cutoff."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    shingles = _doc_shingles(docs).persist()
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        shingles.join(freq, "shingle")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "shingle")
-            ),
+    with staged(spark) as st:
+        shingles = st.persist(_doc_shingles(docs))
+        sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        freq = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        ranked = (
+            shingles.join(freq, "shingle")
+            .withColumn(
+                "rk",
+                F.row_number().over(
+                    Window.partitionBy("doc_id").orderBy("df", "shingle")
+                ),
+            )
+            .join(sizes, "doc_id")
         )
-        .join(sizes, "doc_id")
-    )
-    # pref feeds BOTH sides of the candidate self-join; the build side
-    # broadcasts, and a broadcast build re-evaluates its subtree, so
-    # unpersisted the df-rank window chain (freq agg + two joins +
-    # row_number) ran once per side. Persist the prefix table (the
-    # ~20% shingle sliver) so it is computed once; released after the
-    # eager checkpoint below (persists are invocation-scoped — left
-    # registered, a later invocation's canonically-identical plan
-    # would silently reuse this run's materialized cache).
-    pref = ranked.filter(
-        F.col("rk") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
-    ).select("doc_id", "shingle", "n").persist()
-    # PPJoin length filter: Jaccard ≥ 0.8 forces 4·max(na,nb) ≤
-    # 5·min(na,nb); pruning size-incompatible pairs IN the join
-    # condition keeps them out of the distinct+verify stages entirely.
-    cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n") * 4 <= F.col("b.n") * 5)
-            & (F.col("b.n") * 4 <= F.col("a.n") * 5),
+        # pref feeds BOTH sides of the candidate self-join; the build side
+        # broadcasts, and a broadcast build re-evaluates its subtree, so
+        # unpersisted the df-rank window chain (freq agg + two joins +
+        # row_number) ran once per side. Persist the prefix table (the
+        # ~20% shingle sliver) so it is computed once.
+        pref = st.persist(ranked.filter(
+            F.col("rk") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
+        ).select("doc_id", "shingle", "n"))
+        # PPJoin length filter: Jaccard ≥ 0.8 forces 4·max(na,nb) ≤
+        # 5·min(na,nb); pruning size-incompatible pairs IN the join
+        # condition keeps them out of the distinct+verify stages entirely.
+        cand = st.persist(
+            pref.alias("a")
+            .join(
+                pref.alias("b"),
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.doc_id") < F.col("b.doc_id"))
+                & (F.col("a.n") * 4 <= F.col("b.n") * 5)
+                & (F.col("b.n") * 4 <= F.col("a.n") * 5),
+            )
+            .select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .distinct()
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        # Verify on LSH-style candidates via the shared per-pair set
+        # intersection (see _pair_jaccard — identical output columns and
+        # values to the old explode-join-regroup merge, minus its
+        # Σ(|A|+|B|) exploded shuffle). cand persisted like the sets table
+        # (measured on the containment twin: either one lazy re-evaluates
+        # under a broadcast build).
+        out = (
+            _pair_jaccard(shingles, cand, st)
+            .filter(F.col("n_common") * 1.0 / F.col("n_union") >= JACCARD_T)
+            .orderBy("doc_a", "doc_b")
         )
-        .distinct()
-        .persist()
-    )
-    # Verify on LSH-style candidates via the shared per-pair set
-    # intersection (see _pair_jaccard — identical output columns and
-    # values to the old explode-join-regroup merge, minus its
-    # Σ(|A|+|B|) exploded shuffle). cand persisted like the sets table
-    # (measured on the containment twin: either one lazy re-evaluates
-    # under a broadcast build).
-    releases: list = []
-    out = (
-        _pair_jaccard(shingles, cand, releases)
-        .filter(F.col("n_common") * 1.0 / F.col("n_union") >= JACCARD_T)
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    for df in (shingles, pref, cand, *releases):
-        df.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 # ------------------------------------------- incremental (batch vs corpus)
@@ -2259,46 +2219,45 @@ def q_llm_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("d") >= 2) & (F.col("d") <= SPAN_MAX_DF))
         .select("shingle")
     )
-    psr = ps.join(rare, "shingle").persist()
-    m = (
-        psr.alias("a")
-        .join(
-            psr.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with staged(spark) as st:
+        psr = st.persist(ps.join(rare, "shingle"))
+        m = (
+            psr.alias("a")
+            .join(
+                psr.alias("b"),
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("da"),
+                F.col("b.doc_id").alias("db"),
+                F.col("a.pos").alias("pa"),
+                F.col("b.pos").alias("pb"),
+            )
         )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.col("a.pos").alias("pa"),
-            F.col("b.pos").alias("pb"),
+        w = Window.partitionBy("da", "db", "off").orderBy("pa")
+        runs = m.withColumn("off", F.col("pa") - F.col("pb")).withColumn(
+            "grp", F.col("pa") - F.row_number().over(w)
         )
-    )
-    w = Window.partitionBy("da", "db", "off").orderBy("pa")
-    runs = m.withColumn("off", F.col("pa") - F.col("pb")).withColumn(
-        "grp", F.col("pa") - F.row_number().over(w)
-    )
-    spans = runs.groupBy("da", "db", "off", "grp").agg(
-        (F.count("*") + 2).alias("span_toks")
-    )
-    out = (
-        spans.filter(F.col("span_toks") >= SPAN_MIN_TOKS)
-        .groupBy("da", "db")
-        .agg(
-            F.count("*").alias("n_spans"),
-            F.max("span_toks").alias("longest_span_toks"),
+        spans = runs.groupBy("da", "db", "off", "grp").agg(
+            (F.count("*") + 2).alias("span_toks")
         )
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            "n_spans",
-            "longest_span_toks",
+        out = (
+            spans.filter(F.col("span_toks") >= SPAN_MIN_TOKS)
+            .groupBy("da", "db")
+            .agg(
+                F.count("*").alias("n_spans"),
+                F.max("span_toks").alias("longest_span_toks"),
+            )
+            .select(
+                F.col("da").alias("doc_a"),
+                F.col("db").alias("doc_b"),
+                "n_spans",
+                "longest_span_toks",
+            )
+            .orderBy("doc_a", "doc_b")
         )
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    psr.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 # ------------------------------------------------ quality-aware keeper
@@ -2348,16 +2307,15 @@ def q_llm_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the norm partition → one WindowExec; at 100 TB the keeper choice
     is the same groupBy-sized pass as keep-min-id, just with a real
     ranking."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView(
-        "iws_dd_documents"
-    )
     # Spark SQL unescapes backslashes in single-quoted literals, so the
     # whitespace regex needs '\\s+' in the SQL text where DuckDB takes
     # '\s+' (the curation.py `ws` dialect seam) — a single backslash
     # would collapse runs of the LETTER 's', not whitespace.
-    return spark.sql(
-        _KEEP_BEST.format(t="iws_dd_", g="", div="div", ws=r"\\s+")
-    )
+    with staged(spark) as st:
+        st.view("iws_dd_documents", load(spark, sf_dir, "documents"))
+        return spark.sql(
+            _KEEP_BEST.format(t="iws_dd_", g="", div="div", ws=r"\\s+")
+        )
 
 
 CONTAINMENT_T = 0.8
@@ -2435,121 +2393,114 @@ def q_llm_dedup_containment_prefix(
     test_llm.py); containment beyond ratio {R} is the concatenated-
     crawl regime that ``q_llm_dedup_spans`` handles span-wise."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    ds = _doc_shingles(docs).persist()
-    sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    dfreq = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # ranked feeds BOTH prefix sides (pa/pb carry different cutoffs),
-    # and the candidate join broadcasts one side — a broadcast build
-    # re-evaluates its subtree, so unpersisted the freq-join + window
-    # chain ran once per side. Persist so it runs once; released after
-    # the eager checkpoint below.
-    ranked = (
-        ds.join(dfreq, "shingle")
-        .join(sz, "doc_id")
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "shingle")
-            ),
-        )
-        .persist()
-    )
-    pa = ranked.filter(
-        F.col("r") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
-    ).select(
-        F.col("doc_id").alias("da"), "shingle", F.col("n").alias("na")
-    )
-    pb = ranked.filter(
-        F.col("r") <= F.col("n") - F.expr("(n + 4) div 5") + 1
-    ).select(
-        F.col("doc_id").alias("db"), "shingle", F.col("n").alias("nb")
-    )
-    cand = (
-        pa.join(pb, "shingle")
-        .filter(
-            (
-                (F.col("na") < F.col("nb"))
-                | ((F.col("na") == F.col("nb")) & (F.col("da") < F.col("db")))
+    with staged(spark) as st:
+        ds = st.persist(_doc_shingles(docs))
+        sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        dfreq = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        # ranked feeds BOTH prefix sides (pa/pb carry different cutoffs),
+        # and the candidate join broadcasts one side — a broadcast build
+        # re-evaluates its subtree, so unpersisted the freq-join + window
+        # chain ran once per side. Persist so it runs once.
+        ranked = st.persist(
+            ds.join(dfreq, "shingle")
+            .join(sz, "doc_id")
+            .withColumn(
+                "r",
+                F.row_number().over(
+                    Window.partitionBy("doc_id").orderBy("df", "shingle")
+                ),
             )
-            & (F.col("nb") <= CONTAINMENT_RATIO_MAX * F.col("na"))
         )
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
+        pa = ranked.filter(
+            F.col("r") <= F.col("n") - F.expr("(4 * n + 4) div 5") + 1
+        ).select(
+            F.col("doc_id").alias("da"), "shingle", F.col("n").alias("na")
         )
-        .distinct()
-        .persist()
-    )
-    # Per-PAIR verify via set intersection (see _pair_jaccard): each
-    # doc's distinct shingles become ONE array row; candidates pick up
-    # both arrays by doc-keyed joins and the overlap is
-    # cardinality(array_intersect(...)) per row — bit-identical to the
-    # old explode-join-regroup, without shuffling Σ(|A|+|B|) exploded
-    # rows (measured 2.7 s → 0.5 s at sf0.1, values equal; guide §2.3).
-    # Never the corpus-wide Σ df² self-join either (a candidate-DOCS
-    # semi-join degrades to exactly that whenever most docs have ≥ 1
-    # candidate partner, measured superlinear at sf2).
-    # cand and sets both persisted (and released below): measured
-    # whole-query 7.5 s with either lazy vs 3.4 s with both cached —
-    # each otherwise re-evaluates under a broadcast build.
-    sets = ds.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("sh"), F.count(F.lit(1)).alias("n")
-    ).persist()
-    inter = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("n").alias("n_a"),
-            ),
-            "doc_a",
+        pb = ranked.filter(
+            F.col("r") <= F.col("n") - F.expr("(n + 4) div 5") + 1
+        ).select(
+            F.col("doc_id").alias("db"), "shingle", F.col("n").alias("nb")
         )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("n").alias("n_b"),
-            ),
-            "doc_b",
+        cand = st.persist(
+            pa.join(pb, "shingle")
+            .filter(
+                (
+                    (F.col("na") < F.col("nb"))
+                    | ((F.col("na") == F.col("nb")) & (F.col("da") < F.col("db")))
+                )
+                & (F.col("nb") <= CONTAINMENT_RATIO_MAX * F.col("na"))
+            )
+            .select(
+                F.least("da", "db").alias("doc_a"),
+                F.greatest("da", "db").alias("doc_b"),
+            )
+            .distinct()
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(
-                    "CAST(cardinality(array_intersect(sh_a, sh_b))"
-                    " AS BIGINT)"
-                ).alias(
-                "n_common"
-            ),
-            "n_a",
-            "n_b",
+        # Per-PAIR verify via set intersection (see _pair_jaccard): each
+        # doc's distinct shingles become ONE array row; candidates pick up
+        # both arrays by doc-keyed joins and the overlap is
+        # cardinality(array_intersect(...)) per row — bit-identical to the
+        # old explode-join-regroup, without shuffling Σ(|A|+|B|) exploded
+        # rows (measured 2.7 s → 0.5 s at sf0.1, values equal; guide §2.3).
+        # Never the corpus-wide Σ df² self-join either (a candidate-DOCS
+        # semi-join degrades to exactly that whenever most docs have ≥ 1
+        # candidate partner, measured superlinear at sf2).
+        # cand and sets both persisted: measured whole-query 7.5 s with
+        # either lazy vs 3.4 s with both cached — each otherwise
+        # re-evaluates under a broadcast build.
+        sets = st.persist(ds.groupBy("doc_id").agg(
+            F.collect_list("shingle").alias("sh"), F.count(F.lit(1)).alias("n")
+        ))
+        inter = (
+            cand.join(
+                sets.select(
+                    F.col("doc_id").alias("doc_a"),
+                    F.col("sh").alias("sh_a"),
+                    F.col("n").alias("n_a"),
+                ),
+                "doc_a",
+            )
+            .join(
+                sets.select(
+                    F.col("doc_id").alias("doc_b"),
+                    F.col("sh").alias("sh_b"),
+                    F.col("n").alias("n_b"),
+                ),
+                "doc_b",
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                F.expr(
+                        "CAST(cardinality(array_intersect(sh_a, sh_b))"
+                        " AS BIGINT)"
+                    ).alias(
+                    "n_common"
+                ),
+                "n_a",
+                "n_b",
+            )
         )
-    )
-    out = (
-        inter.filter(
-            5 * F.col("n_common") >= 4 * F.least("n_a", "n_b")
+        out = (
+            inter.filter(
+                5 * F.col("n_common") >= 4 * F.least("n_a", "n_b")
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_common",
+                "n_a",
+                "n_b",
+                F.round(
+                    F.col("n_common") / F.least("n_a", "n_b"), 4
+                ).alias("containment"),
+                F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
+                .otherwise(F.col("doc_b"))
+                .alias("contained_doc"),
+            )
+            .orderBy("doc_a", "doc_b")
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            F.round(
-                F.col("n_common") / F.least("n_a", "n_b"), 4
-            ).alias("containment"),
-            F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_doc"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    cand.unpersist()
-    sets.unpersist()
-    ranked.unpersist()
-    ds.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 q_llm_dedup_containment_prefix.__doc__ = (
@@ -2596,48 +2547,47 @@ def q_llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-hashes) — and span-level partial overlap below the shingle-set
     threshold is q_llm_dedup_spans' job."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    ds = _doc_shingles(docs).persist()
-    sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = ds.alias("a"), ds.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with staged(spark) as st:
+        ds = st.persist(_doc_shingles(docs))
+        sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        a, b = ds.alias("a"), ds.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+        sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+        out = (
+            inter.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .withColumn(
+                "containment",
+                F.round(
+                    F.col("n_common") / F.least("n_a", "n_b"),
+                    4,
+                ),
+            )
+            .filter(
+                F.col("n_common") / F.least("n_a", "n_b") >= CONTAINMENT_T
+            )
+            .select(
+                "doc_a",
+                "doc_b",
+                "n_common",
+                "n_a",
+                "n_b",
+                "containment",
+                F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
+                .otherwise(F.col("doc_b"))
+                .alias("contained_doc"),
+            )
+            .orderBy("doc_a", "doc_b")
         )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "containment",
-            F.round(
-                F.col("n_common") / F.least("n_a", "n_b"),
-                4,
-            ),
-        )
-        .filter(
-            F.col("n_common") / F.least("n_a", "n_b") >= CONTAINMENT_T
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            "containment",
-            F.when(F.col("n_a") <= F.col("n_b"), F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_doc"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    ds.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)

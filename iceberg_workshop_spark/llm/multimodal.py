@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.session import staged
 from iceberg_workshop_spark.sources.tables import load
 
 # Probe for real codecs at import; the container ships neither PIL nor
@@ -576,47 +577,46 @@ def q_llm_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInPandas Python pass — is evaluated once per join side
     # (plan showed two MapInPandas nodes). Persist the tiny
     # (doc_id, fp) table so bytes cross the Python boundary once.
-    fp = docs.mapInPandas(_phash, schema=fp_schema).persist()
-    bands = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(*[F.lit(b) for b in range(PHASH_BANDS)])
-        ).alias("band"),
-    ).withColumn(
-        "band_val",
-        F.expr(
-            f"shiftright(fp, {PHASH_BAND_BITS} * band)"
-            f" & {(1 << PHASH_BAND_BITS) - 1}"
-        ),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    with staged(spark) as st:
+        fp = st.persist(docs.mapInPandas(_phash, schema=fp_schema))
+        bands = fp.select(
+            "doc_id",
+            "fp",
+            F.explode(
+                F.array(*[F.lit(b) for b in range(PHASH_BANDS)])
+            ).alias("band"),
+        ).withColumn(
+            "band_val",
+            F.expr(
+                f"shiftright(fp, {PHASH_BAND_BITS} * band)"
+                f" & {(1 << PHASH_BAND_BITS) - 1}"
+            ),
         )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
+        a, b = bands.alias("a"), bands.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.band_val") == F.col("b.band_val"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.fp").alias("fp_a"),
+                F.col("b.fp").alias("fp_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    out = (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(
-                F.col("fp_a").bitwiseXOR(F.col("fp_b"))
-            ).cast("long"),
+        out = (
+            cand.withColumn(
+                "hamming",
+                F.bit_count(
+                    F.col("fp_a").bitwiseXOR(F.col("fp_b"))
+                ).cast("long"),
+            )
+            .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
+            .select("doc_a", "doc_b", "hamming")
+            .orderBy("doc_a", "doc_b")
         )
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
-    out = out.localCheckpoint(eager=True)
-    fp.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)

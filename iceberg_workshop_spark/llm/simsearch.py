@@ -512,8 +512,9 @@ def q_llm_simsearch_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: each arrival scores ONLY the new batch (O(batch) work,
     TakeOrdered → k rows) and merges with O(k) retained state —
     never a re-scan of the historical corpus. Each step is
-    materialized (persist+count) to model the ingest boundary and
-    keep lineage flat.
+    materialized (an eager localCheckpoint) to model the ingest
+    boundary and keep lineage flat; a superseded state's blocks are
+    freed by the ContextCleaner.
     """
     emb = _with_norm(
         load(spark, sf_dir, "embeddings").select(
@@ -543,15 +544,11 @@ def q_llm_simsearch_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(TOP_K)
         )
         merged = local if state is None else state.unionAll(local)
-        prev = state
-        state = (
+        state = (  # materialized: the ingest-batch boundary
             merged.orderBy(F.col("cosine_raw").desc(), F.col("vec_id").asc())
             .limit(TOP_K)
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        state.count()  # materialize: the ingest-batch boundary
-        if prev is not None:
-            prev.unpersist()  # superseded state — k rows, but don't leak
     return state.select("vec_id", F.round("cosine_raw", 4).alias("cosine"))
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.sources.tables import fixture_sql, load
 
 # Per-language marker lexicons (fixture text shares one synthetic
 # vocabulary, so these are demonstration lists over it; a production
@@ -516,10 +516,10 @@ PACK_BUDGET_TOKENS = 256
 PACK_GROUPS = 8
 
 # One SQL text, two engines: runs verbatim under Spark SQL and DuckDB
-# ({t} = view prefix; {split} differs only in the split function name).
+# ({documents} = the table; {split} differs only in the split function name).
 _CHUNK_PACK_SQL = """
 WITH t AS (
-  SELECT doc_id, {split}(trim(text), ' ') AS toks FROM {t}documents
+  SELECT doc_id, {split}(trim(text), ' ') AS toks FROM {documents}
 ), starts AS (
   {starts_body}
 ), chunks AS (
@@ -563,7 +563,7 @@ def _chunk_pack_sql(spark_side: bool) -> str:
     # max start index: fixture docs are < 4000 tokens; generate_series
     # is bounded and filtered against the real token count.
     return _CHUNK_PACK_SQL.format(
-        t="iws_docs_" if spark_side else "",
+        documents="{documents}" if spark_side else "documents",
         split="split" if spark_side else "string_split",
         size="size" if spark_side else "len",
         starts_body=(
@@ -602,8 +602,7 @@ def q_llm_chunk_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     that survives 100 TB). One fused plan: the dedup window, the
     packing window and the final rollup all reuse the group
     partitioning. Identical SQL text runs on both engines."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("iws_docs_documents")
-    return spark.sql(_chunk_pack_sql(True))
+    return fixture_sql(spark, sf_dir, _chunk_pack_sql(True))
 
 
 # ------------------------------------------------ perplexity filter

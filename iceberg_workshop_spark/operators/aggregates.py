@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.exprs import SQL_REVENUE, money, revenue_expr
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import fan_out, load
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fan_out, fixture_sql, load
 
 
 @register(
@@ -141,7 +141,6 @@ def q_agg_rollup_cube_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = region.join(nation, nation.n_regionkey == region.r_regionkey).select(
         "r_name", "n_name"
     )
-    rn.createOrReplaceTempView("iws_rn")
 
     def block(mode: str, clause: str) -> DataFrame:
         return spark.sql(
@@ -151,8 +150,9 @@ def q_agg_rollup_cube_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
                    COALESCE(n_name, '(all)') AS n_name,
                    CAST(GROUPING_ID(r_name, n_name) AS BIGINT) AS gid,
                    COUNT(*) AS n
-            FROM iws_rn GROUP BY {clause}
-            """
+            FROM {{rn}} GROUP BY {clause}
+            """,
+            rn=rn,
         )
 
     return (
@@ -408,16 +408,16 @@ def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = nation.join(
         F.broadcast(region), F.col("r_regionkey") == F.col("n_regionkey")
     )
-    joined.createOrReplaceTempView("iws_listagg_src")
     return spark.sql(
         """
         SELECT r_name,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
                COUNT(*) AS n
-        FROM iws_listagg_src
+        FROM {joined}
         GROUP BY r_name
         ORDER BY r_name
-        """
+        """,
+        joined=joined,
     )
 
 
@@ -490,7 +490,6 @@ def q_agg_rollup_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month("o_orderdate").alias("mon"),
         "o_totalprice",
     )
-    o.createOrReplaceTempView("iws_rollup_time")
     return spark.sql(
         """
         SELECT COALESCE(CAST(yr AS STRING), '(all)') AS yr,
@@ -499,76 +498,54 @@ def q_agg_rollup_time(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(GROUPING_ID(yr, qtr, mon) AS BIGINT) AS gid,
                COUNT(*) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        FROM iws_rollup_time
+        FROM {o}
         GROUP BY ROLLUP (yr, qtr, mon)
         ORDER BY yr, qtr, mon, gid
-        """
+        """,
+        o=o,
     )
 
 
-@register(
-    "q_agg_group_by_all",
-    oracle="""
+_AGG_GROUP_BY_ALL = """
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-    FROM orders
+    FROM {orders}
     GROUP BY ALL
     ORDER BY o_orderstatus, o_orderpriority
-    """,
-)
+    """
+
+
+@register("q_agg_group_by_all", oracle=_AGG_GROUP_BY_ALL.format(**FIXTURE_VIEWS))
 def q_agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL (SQL:2023 sugar, identical in Spark 4 and DuckDB):
     every non-aggregate select item becomes a grouping key — the
     analyst shorthand that removes the copy-the-select-list chore.
     Resolves at analysis time to the ordinary two-key hash aggregate."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("iws_gba_orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        FROM iws_gba_orders
-        GROUP BY ALL
-        ORDER BY o_orderstatus, o_orderpriority
-        """
-    )
+    return fixture_sql(spark, sf_dir, _AGG_GROUP_BY_ALL)
 
 
-@register(
-    "q_agg_filter_clause",
-    oracle="""
+_AGG_FILTER_CLAUSE = """
     SELECT l_returnflag,
            COUNT(*) AS n_all,
            COUNT(*) FILTER (WHERE l_quantity >= 25) AS n_big,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
                 FILTER (WHERE l_discount = 0) AS DOUBLE) AS undiscounted,
            MAX(l_quantity) FILTER (WHERE l_linestatus = 'F') AS max_qty_f
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY l_returnflag
     ORDER BY l_returnflag
-    """,
-)
+    """
+
+
+@register("q_agg_filter_clause", oracle=_AGG_FILTER_CLAUSE.format(**FIXTURE_VIEWS))
 def q_agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL:2003 FILTER clause on aggregates (shared by Spark and
     DuckDB): per-aggregate predicates without CASE scaffolding, all
     evaluated in ONE pass of the hash aggregate — the conditional-
     aggregation idiom q_agg_q12/q14 write with CASE, in its declarative
     form."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("iws_fc_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               COUNT(*) AS n_all,
-               COUNT(*) FILTER (WHERE l_quantity >= 25) AS n_big,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-                    FILTER (WHERE l_discount = 0) AS DOUBLE) AS undiscounted,
-               MAX(l_quantity) FILTER (WHERE l_linestatus = 'F') AS max_qty_f
-        FROM iws_fc_lineitem
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-        """
-    )
+    return fixture_sql(spark, sf_dir, _AGG_FILTER_CLAUSE)
 
 
 @register(
@@ -669,7 +646,7 @@ WITH w AS (
   SELECT l_returnflag,
          CAST(l_quantity AS BIGINT) AS qty,
          CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS wt
-  FROM {t}lineitem
+  FROM {lineitem}
 ),
 cum AS (
   SELECT l_returnflag, qty, wt,
@@ -689,7 +666,7 @@ ORDER BY l_returnflag
 """
 
 
-@register("q_agg_weighted_median", oracle=_WMEDIAN.format(t=""))
+@register("q_agg_weighted_median", oracle=_WMEDIAN.format(**FIXTURE_VIEWS))
 def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact revenue-weighted median quantity per return flag: order
     by value, prefix-sum integer-cent weights, take the first value
@@ -697,8 +674,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiply at the boundary). The pattern generalizes to any
     weighted quantile; weights stay integers so no float can flip the
     crossing row."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("iws_wm_lineitem")
-    return spark.sql(_WMEDIAN.format(t="iws_wm_"))
+    return fixture_sql(spark, sf_dir, _WMEDIAN)
 
 
 @register(

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 FUNNEL = ["view", "click", "purchase"]
 N_BUCKETS = 10
@@ -191,32 +191,32 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_quality_expectations",
-    oracle="""
+_QUALITY_EXPECTATIONS = """
     SELECT 'lineitem_discount_range' AS rule, COUNT(*) AS violations
-    FROM lineitem WHERE l_discount < 0 OR l_discount > 1
+    FROM {lineitem} WHERE l_discount < 0 OR l_discount > 1
     UNION ALL
     SELECT 'lineitem_orders_fk', COUNT(*)
-    FROM lineitem l
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
+    FROM {lineitem} l
+    WHERE NOT EXISTS (SELECT 1 FROM {orders} o WHERE o.o_orderkey = l.l_orderkey)
     UNION ALL
     SELECT 'lineitem_qty_range', COUNT(*)
-    FROM lineitem WHERE l_quantity < 1 OR l_quantity > 50
+    FROM {lineitem} WHERE l_quantity < 1 OR l_quantity > 50
     UNION ALL
     SELECT 'orders_customer_fk', COUNT(*)
-    FROM orders o
-    WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+    FROM {orders} o
+    WHERE NOT EXISTS (SELECT 1 FROM {customer} c WHERE c.c_custkey = o.o_custkey)
     UNION ALL
     SELECT 'orders_null_priority', COUNT(*)
-    FROM orders WHERE o_orderpriority IS NULL
+    FROM {orders} WHERE o_orderpriority IS NULL
     UNION ALL
     SELECT 'orders_pk_unique',
            CAST(COUNT(*) - COUNT(DISTINCT o_orderkey) AS BIGINT)
-    FROM orders
+    FROM {orders}
     ORDER BY rule
-    """,
-)
+    """
+
+
+@register("q_quality_expectations", oracle=_QUALITY_EXPECTATIONS.format(**FIXTURE_VIEWS))
 def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectation suite (the write-audit gate of
     q_wap_pattern as a standalone report): referential integrity via
@@ -225,35 +225,7 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the FK anti-joins shuffle once on the key. Violation
     counts (all zero on healthy fixtures) are the contract a
     production pipeline would alert on."""
-    for n in ("lineitem", "orders", "customer"):
-        load(spark, sf_dir, n).createOrReplaceTempView(f"iws_dq_{n}")
-    return spark.sql(
-        """
-        SELECT 'lineitem_discount_range' AS rule, COUNT(*) AS violations
-        FROM iws_dq_lineitem WHERE l_discount < 0 OR l_discount > 1
-        UNION ALL
-        SELECT 'lineitem_orders_fk', COUNT(*)
-        FROM iws_dq_lineitem l
-        WHERE NOT EXISTS (SELECT 1 FROM iws_dq_orders o
-                          WHERE o.o_orderkey = l.l_orderkey)
-        UNION ALL
-        SELECT 'lineitem_qty_range', COUNT(*)
-        FROM iws_dq_lineitem WHERE l_quantity < 1 OR l_quantity > 50
-        UNION ALL
-        SELECT 'orders_customer_fk', COUNT(*)
-        FROM iws_dq_orders o
-        WHERE NOT EXISTS (SELECT 1 FROM iws_dq_customer c
-                          WHERE c.c_custkey = o.o_custkey)
-        UNION ALL
-        SELECT 'orders_null_priority', COUNT(*)
-        FROM iws_dq_orders WHERE o_orderpriority IS NULL
-        UNION ALL
-        SELECT 'orders_pk_unique',
-               CAST(COUNT(*) - COUNT(DISTINCT o_orderkey) AS BIGINT)
-        FROM iws_dq_orders
-        ORDER BY rule
-        """
-    )
+    return fixture_sql(spark, sf_dir, _QUALITY_EXPECTATIONS)
 
 
 _OHLC = """
@@ -263,7 +235,7 @@ WITH e AS (
                             ORDER BY ts, event_id) AS rn_a,
          ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
                             ORDER BY ts DESC, event_id DESC) AS rn_d
-  FROM {t}events
+  FROM {events}
 )
 SELECT event_type, hr,
        CAST(COUNT(*) AS BIGINT) AS n,
@@ -278,7 +250,7 @@ ORDER BY event_type, hr
 """
 
 
-@register("q_agg_ohlc", oracle=_OHLC.format(t=""))
+@register("q_agg_ohlc", oracle=_OHLC.format(**FIXTURE_VIEWS))
 def q_agg_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC downsample of the event value stream — the
     hypertable-rollup staple (continuous aggregates in time-series
@@ -291,14 +263,13 @@ def q_agg_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, hour) — no global sort anywhere; the rollup output is
     |types|×|hours| rows, the shape a continuous aggregate would
     incrementally maintain (q_incr_agg_maintenance)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("iws_ohlc_events")
-    return spark.sql(_OHLC.format(t="iws_ohlc_"))
+    return fixture_sql(spark, sf_dir, _OHLC)
 
 
 _GINI = """
 WITH cnt AS (
   SELECT source, lang, COUNT(*) AS n
-  FROM {t}documents GROUP BY source, lang
+  FROM {documents} GROUP BY source, lang
 ),
 tot AS (
   SELECT source, CAST(SUM(n) AS BIGINT) AS total,
@@ -314,7 +285,7 @@ FROM tot ORDER BY source
 """
 
 
-@register("q_agg_gini", oracle=_GINI.format(t=""))
+@register("q_agg_gini", oracle=_GINI.format(**FIXTURE_VIEWS))
 def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source language-mix Gini impurity (1 − Σ pᵢ²) — the
     diversity diagnostic a corpus-mixing pipeline reads before setting
@@ -325,7 +296,4 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     division at the end, bit-identical across engines. Two hash
     aggregates on (source, lang) then (source); output is
     |sources| rows at any corpus size."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView(
-        "iws_gini_documents"
-    )
-    return spark.sql(_GINI.format(t="iws_gini_"))
+    return fixture_sql(spark, sf_dir, _GINI)

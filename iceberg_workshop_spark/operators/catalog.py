@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.session import staged
 from iceberg_workshop_spark.sources.tables import TABLE_NAMES, load
 
 
@@ -54,24 +55,25 @@ def q_catalog_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked.
     """
     spark.sql("CREATE DATABASE IF NOT EXISTS iws_catalog")
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).createOrReplaceTempView(f"iws_cat_{t}")
+    with staged(spark) as st:
+        for t in TABLE_NAMES:
+            st.view(f"iws_cat_{t}", load(spark, sf_dir, t))
 
-    # DROP + re-listing: a dropped view must vanish (A32 semantics).
-    load(spark, sf_dir, "region").createOrReplaceTempView("iws_cat_doomed")
-    spark.sql("DROP VIEW IF EXISTS iws_cat_doomed")
+        # DROP + re-listing: a dropped view must vanish (A32 semantics).
+        st.view("iws_cat_doomed", load(spark, sf_dir, "region"))
+        spark.sql("DROP VIEW IF EXISTS iws_cat_doomed")
 
-    shown = spark.sql("SHOW TABLES").filter(
-        F.col("tableName").startswith("iws_cat_")
-    )
-    tables = shown.select(
-        F.lit("table").alias("object_type"),
-        F.regexp_replace("tableName", "^iws_cat_", "").alias("name"),
-    )
-    described = spark.sql("DESCRIBE iws_cat_customer").select(
-        F.lit("column").alias("object_type"), F.col("col_name").alias("name")
-    )
-    return tables.unionAll(described).orderBy("object_type", "name")
+        shown = spark.sql("SHOW TABLES").filter(
+            F.col("tableName").startswith("iws_cat_")
+        )
+        tables = shown.select(
+            F.lit("table").alias("object_type"),
+            F.regexp_replace("tableName", "^iws_cat_", "").alias("name"),
+        )
+        described = spark.sql("DESCRIBE iws_cat_customer").select(
+            F.lit("column").alias("object_type"), F.col("col_name").alias("name")
+        )
+        return tables.unionAll(described).orderBy("object_type", "name")
 
 
 @register(

@@ -25,19 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
-
-_P = "iws_gr_"
+from iceberg_workshop_spark.session import staged
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 _PAGERANK = """
 WITH edges AS (
   SELECT sn.n_nationkey AS src, cn.n_nationkey AS dst, COUNT(*) AS w
-  FROM {t}lineitem l
-  JOIN {t}orders o ON l.l_orderkey = o.o_orderkey
-  JOIN {t}customer c ON o.o_custkey = c.c_custkey
-  JOIN {t}supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN {t}nation cn ON c.c_nationkey = cn.n_nationkey
-  JOIN {t}nation sn ON s.s_nationkey = sn.n_nationkey
+  FROM {lineitem} l
+  JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+  JOIN {customer} c ON o.o_custkey = c.c_custkey
+  JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+  JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
+  JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
   GROUP BY sn.n_nationkey, cn.n_nationkey
 ),
 outw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY src),
@@ -74,17 +73,17 @@ FROM s3 ORDER BY score DESC, node
 
 _EDGES = """
 SELECT sn.n_nationkey AS src, cn.n_nationkey AS dst, COUNT(*) AS w
-FROM {t}lineitem l
-JOIN {t}orders o ON l.l_orderkey = o.o_orderkey
-JOIN {t}customer c ON o.o_custkey = c.c_custkey
-JOIN {t}supplier s ON l.l_suppkey = s.s_suppkey
-JOIN {t}nation cn ON c.c_nationkey = cn.n_nationkey
-JOIN {t}nation sn ON s.s_nationkey = sn.n_nationkey
+FROM {lineitem} l
+JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+JOIN {customer} c ON o.o_custkey = c.c_custkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
+JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
 GROUP BY sn.n_nationkey, cn.n_nationkey
 """
 
 
-@register("q_graph_pagerank", oracle=_PAGERANK.format(t="", div="//"))
+@register("q_graph_pagerank", oracle=_PAGERANK.format(**FIXTURE_VIEWS, div="//"))
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (3 iterations, damping 0.85) over the
     supplier-nation → customer-nation trade graph, in scaled-integer
@@ -97,47 +96,38 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm at sf0.1). Each iteration is then one join+agg over the tiny edge
     relation; on a billion-edge graph the same loop shuffles edges
     once per round, which is the Pregel lower bound."""
-    for n in ("lineitem", "orders", "customer", "supplier", "nation"):
-        df = load(spark, sf_dir, n)
-        df.createOrReplaceTempView(f"{_P}{n}")
-    edges = spark.sql(_EDGES.format(t=_P)).persist()
-    outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("ow"))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    scores = nodes.select("node", F.lit(1000000000).cast("bigint").alias("score"))
-    ew = edges.join(outw, "src")
-    for _ in range(3):
-        contrib = (
-            ew.join(scores, ew.src == scores.node)
-            .select(
-                F.col("dst"),
-                F.expr("(score * w) div ow").alias("part"),
+    with staged(spark) as st:
+        edges = st.persist(fixture_sql(spark, sf_dir, _EDGES))
+        outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("ow"))
+        nodes = st.persist(
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        scores = nodes.select("node", F.lit(1000000000).cast("bigint").alias("score"))
+        ew = edges.join(outw, "src")
+        for _ in range(3):
+            contrib = (
+                ew.join(scores, ew.src == scores.node)
+                .select(
+                    F.col("dst"),
+                    F.expr("(score * w) div ow").alias("part"),
+                )
+                .groupBy("dst")
+                .agg(F.sum("part").cast("bigint").alias("contrib"))
             )
-            .groupBy("dst")
-            .agg(F.sum("part").cast("bigint").alias("contrib"))
-        )
-        scores = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-            "node",
-            F.expr(
-                "CAST(150000000 + (85 * COALESCE(contrib, 0)) div 100 AS BIGINT)"
-            ).alias("score"),
-        )
-    out = scores.select(
-        F.col("node").alias("nationkey"), F.col("score").alias("pagerank_scaled")
-    ).orderBy(F.col("pagerank_scaled").desc(), "nationkey")
-    # Persists are invocation-scoped (bench contract): checkpoint the
-    # 25-row result eagerly, then release the edge/node caches —
-    # returned lazy, they stayed in the CacheManager for the rest of
-    # the session and later invocations silently reused the first
-    # run's materialized blocks.
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+            scores = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+                "node",
+                F.expr(
+                    "CAST(150000000 + (85 * COALESCE(contrib, 0)) div 100 AS BIGINT)"
+                ).alias("score"),
+            )
+        out = scores.select(
+            F.col("node").alias("nationkey"), F.col("score").alias("pagerank_scaled")
+        ).orderBy(F.col("pagerank_scaled").desc(), "nationkey")
+        # Checkpoint the 25-row result before the stage unpersists the
+        # edge/node caches.
+        return out.localCheckpoint(eager=True)
 
 
 # Edge list + degree-oriented exact wedge count over an arbitrary
@@ -146,7 +136,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAIRS_CTE = """
 pairs AS (
   SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM {t}lineitem a JOIN {t}lineitem b
+  FROM {lineitem} a JOIN {lineitem} b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 )"""
 
@@ -249,7 +239,7 @@ SELECT (SELECT COUNT(*) FROM pairs) AS n_edges,
 )
 
 
-def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
+def _tri_stats(edges: DataFrame, st: staged) -> tuple[DataFrame, DataFrame]:
     """LAZY (deg, one-row tri-count) frames for one distinct edge set.
 
     Triangle count via out-adjacency intersection (the compact-forward
@@ -270,34 +260,31 @@ def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
     staged this as ~10 sequential eager localCheckpoint jobs and the
     lost stage overlap made the query SLOWER on 32 cores — 32c/8c
     scaling ratio 1.44), full lineage (fault-tolerant at scale, unlike
-    localCheckpoint) and MEMORY_AND_DISK spill. Frames are appended to
-    ``releases`` so the caller unpersists them after its one action.
+    localCheckpoint) and MEMORY_AND_DISK spill. The frames are
+    persisted in the caller's stage, released after its one action.
     """
-    deg = (
+    deg = st.persist(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     du = deg.select(F.col("node").alias("u_node"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v_node"), F.col("d").alias("dv"))
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = st.persist(
         edges.join(du, F.col("u") == F.col("u_node"))
         .join(dv, F.col("v") == F.col("v_node"))
         .select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
-        .persist()
     )
-    adj = (
+    adj = st.persist(
         oriented.groupBy(F.col("s").alias("node"))
         .agg(F.collect_list("t").alias("nbrs"))
-        .persist()
     )
     a1 = adj.select(F.col("node").alias("n1"), F.col("nbrs").alias("nb1"))
     a2 = adj.select(F.col("node").alias("n2"), F.col("nbrs").alias("nb2"))
@@ -311,18 +298,17 @@ def _tri_stats(edges: DataFrame, releases: list) -> tuple[DataFrame, DataFrame]:
             ).alias("n_tri")
         )
     )
-    releases.extend([deg, oriented, adj])
     return deg, tri
 
 
 def _tri_frames(
-    spark: SparkSession, sf_dir: str, with_exact: bool
-) -> tuple[dict[str, DataFrame], list]:
+    spark: SparkSession, sf_dir: str, st: staged, with_exact: bool
+) -> dict[str, DataFrame]:
     """Shared lazy building blocks for both triangle queries.
 
     Returns ``{pairs, samp, deg, tri, s_tri}`` (``deg``/``tri`` only
-    when ``with_exact``) plus the list of persisted frames the caller
-    must release after its single materializing action. Everything is
+    when ``with_exact``), persisted in ``st``, which the caller exits
+    after its single materializing action. Everything is
     LAZY: one final action evaluates the whole DAG, AQE overlapping
     the exact and sampled branches across all cores (guide §2.6),
     versus round-14's serial eager-checkpoint staging that also pinned
@@ -336,24 +322,22 @@ def _tri_frames(
     b = li.select(
         F.col("l_orderkey").alias("ok_b"), F.col("l_partkey").alias("v")
     )
-    pairs = (
+    pairs = st.persist(
         a.join(b, (F.col("ok") == F.col("ok_b")) & (F.col("u") < F.col("v")))
         .select("u", "v")
         .distinct()
-        .persist()
     )
-    samp = pairs.where(F.expr(f"{_HEX_SPARK} % {_SAMPLE_P_INV} = 0")).persist()
-    releases: list = [pairs, samp]
+    samp = st.persist(pairs.where(F.expr(f"{_HEX_SPARK} % {_SAMPLE_P_INV} = 0")))
     out: dict[str, DataFrame] = {"pairs": pairs, "samp": samp}
     if with_exact:
-        out["deg"], out["tri"] = _tri_stats(pairs, releases)
-    _, out["s_tri"] = _tri_stats(samp, releases)
-    return out, releases
+        out["deg"], out["tri"] = _tri_stats(pairs, st)
+    _, out["s_tri"] = _tri_stats(samp, st)
+    return out
 
 
 @register(
     "q_graph_triangles",
-    oracle=_TRIANGLES.format(t="", div="//", hexint=_HEX_DUCK),
+    oracle=_TRIANGLES.format(**FIXTURE_VIEWS, div="//", hexint=_HEX_DUCK),
     tags=("baseline-only",),
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,54 +365,52 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     its error certificate: ``est_triangles`` replays the sampled
     estimator next to the exact count and ``est_err_pct`` is the
     in-query relative error, both deterministic in either engine."""
-    fr, releases = _tri_frames(spark, sf_dir, with_exact=True)
-    # One-row stats assembled by crossJoin of one-row aggregates so the
-    # WHOLE pipeline — both edge sets' degree/orientation/adjacency/
-    # intersection branches — evaluates in ONE action (the eager
-    # checkpoint below), instead of one scalar-subquery job per stat.
-    # Expressions mirror the oracle's scalar subqueries verbatim
-    # (SUM over an empty deg is NULL → CASE falls through to a NULL
-    # quotient, exactly like the SQL form).
-    deg_agg = fr["deg"].agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum(F.expr("(d * (d - 1)) div 2")).alias("wedges"),
-    )
-    edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
-    tri = fr["tri"].withColumnRenamed("n_tri", "n_triangles")
-    s_tri = fr["s_tri"].withColumnRenamed("n_tri", "s_n_tri")
-    out = (
-        deg_agg.crossJoin(edge_cnt)
-        .crossJoin(tri)
-        .crossJoin(s_tri)
-        .select(
-            "n_nodes",
-            "n_edges",
-            "n_triangles",
-            F.expr(
-                "CASE WHEN wedges = 0 THEN NULL"
-                " ELSE round(CAST(3 * n_triangles AS DOUBLE)"
-                " / CAST(wedges AS DOUBLE), 4) END"
-            ).alias("global_clustering"),
-            F.expr(
-                f"CAST({_SAMPLE_P_INV ** 3} * s_n_tri AS BIGINT)"
-            ).alias("est_triangles"),
-            F.expr(
-                "CASE WHEN n_triangles = 0 THEN NULL"
-                f" ELSE round(CAST(100 * abs({_SAMPLE_P_INV ** 3} * s_n_tri"
-                " - n_triangles) AS DOUBLE)"
-                " / CAST(n_triangles AS DOUBLE), 1) END"
-            ).alias("est_err_pct"),
+    with staged(spark) as st:
+        fr = _tri_frames(spark, sf_dir, st, with_exact=True)
+        # One-row stats assembled by crossJoin of one-row aggregates so the
+        # WHOLE pipeline — both edge sets' degree/orientation/adjacency/
+        # intersection branches — evaluates in ONE action (the eager
+        # checkpoint below), instead of one scalar-subquery job per stat.
+        # Expressions mirror the oracle's scalar subqueries verbatim
+        # (SUM over an empty deg is NULL → CASE falls through to a NULL
+        # quotient, exactly like the SQL form).
+        deg_agg = fr["deg"].agg(
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.sum(F.expr("(d * (d - 1)) div 2")).alias("wedges"),
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    for df in releases:
-        df.unpersist()
-    return out
+        edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
+        tri = fr["tri"].withColumnRenamed("n_tri", "n_triangles")
+        s_tri = fr["s_tri"].withColumnRenamed("n_tri", "s_n_tri")
+        out = (
+            deg_agg.crossJoin(edge_cnt)
+            .crossJoin(tri)
+            .crossJoin(s_tri)
+            .select(
+                "n_nodes",
+                "n_edges",
+                "n_triangles",
+                F.expr(
+                    "CASE WHEN wedges = 0 THEN NULL"
+                    " ELSE round(CAST(3 * n_triangles AS DOUBLE)"
+                    " / CAST(wedges AS DOUBLE), 4) END"
+                ).alias("global_clustering"),
+                F.expr(
+                    f"CAST({_SAMPLE_P_INV ** 3} * s_n_tri AS BIGINT)"
+                ).alias("est_triangles"),
+                F.expr(
+                    "CASE WHEN n_triangles = 0 THEN NULL"
+                    f" ELSE round(CAST(100 * abs({_SAMPLE_P_INV ** 3} * s_n_tri"
+                    " - n_triangles) AS DOUBLE)"
+                    " / CAST(n_triangles AS DOUBLE), 1) END"
+                ).alias("est_err_pct"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
     "q_graph_triangles_approx",
-    oracle=_TRIANGLES_APPROX.format(t="", hexint=_HEX_DUCK),
+    oracle=_TRIANGLES_APPROX.format(**FIXTURE_VIEWS, hexint=_HEX_DUCK),
 )
 def q_graph_triangles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-safe triangle estimate: Doulion edge sampling
@@ -448,23 +430,21 @@ def q_graph_triangles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge key, so the oracle replays it bit-for-bit; the error-
     vs-exact certificate lives in the baseline-only
     ``q_graph_triangles``."""
-    fr, releases = _tri_frames(spark, sf_dir, with_exact=False)
-    edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
-    samp_cnt = fr["samp"].agg(F.count(F.lit(1)).alias("n_edges_sampled"))
-    s_tri = fr["s_tri"].withColumnRenamed("n_tri", "n_tri_sampled")
-    out = (
-        edge_cnt.crossJoin(samp_cnt)
-        .crossJoin(s_tri)
-        .select(
-            "n_edges",
-            "n_edges_sampled",
-            "n_tri_sampled",
-            F.expr(
-                f"CAST({_SAMPLE_P_INV ** 3} * n_tri_sampled AS BIGINT)"
-            ).alias("est_triangles"),
+    with staged(spark) as st:
+        fr = _tri_frames(spark, sf_dir, st, with_exact=False)
+        edge_cnt = fr["pairs"].agg(F.count(F.lit(1)).alias("n_edges"))
+        samp_cnt = fr["samp"].agg(F.count(F.lit(1)).alias("n_edges_sampled"))
+        s_tri = fr["s_tri"].withColumnRenamed("n_tri", "n_tri_sampled")
+        out = (
+            edge_cnt.crossJoin(samp_cnt)
+            .crossJoin(s_tri)
+            .select(
+                "n_edges",
+                "n_edges_sampled",
+                "n_tri_sampled",
+                F.expr(
+                    f"CAST({_SAMPLE_P_INV ** 3} * n_tri_sampled AS BIGINT)"
+                ).alias("est_triangles"),
+            )
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    for df in releases:
-        df.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from iceberg_workshop_spark.exprs import SQL_REVENUE, money, revenue_expr
 from iceberg_workshop_spark.registry import register, require
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 
 @register(
@@ -874,7 +874,7 @@ _SPATIAL_PTS = """
   SELECT c_custkey AS pid,
          CAST({hex8a} AS BIGINT) % 100000 AS x,
          CAST({hex8b} AS BIGINT) % 100000 AS y
-  FROM {t}customer
+  FROM {customer}
 """
 
 
@@ -888,13 +888,14 @@ def _spatial_candidates(spark: SparkSession, sf_dir: str):
     CANDIDATE PAIR, not wall-clock per row, is the quantity that must
     stay flat for the plan to be scale-sound, and the certificate
     measures exactly this stream."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("iws_sp_customer")
-    pts = spark.sql(
+    pts = fixture_sql(
+        spark,
+        sf_dir,
         _SPATIAL_PTS.format(
-            t="iws_sp_",
+            customer="{customer}",
             hex8a="conv(substring(md5(CAST(c_custkey AS STRING)), 1, 8), 16, 10)",
             hex8b="conv(substring(md5(CAST(c_custkey AS STRING)), 9, 8), 16, 10)",
-        )
+        ),
     )
     C = SPATIAL_CELL
     home = pts.select(
@@ -924,7 +925,7 @@ def _spatial_candidates(spark: SparkSession, sf_dir: str):
     "q_join_spatial_radius",
     oracle=f"""
     WITH pts AS ({_SPATIAL_PTS.format(
-        t="",
+        **FIXTURE_VIEWS,
         hex8a="('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT",
         hex8b="('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 9, 8))::BIGINT",
     )}),

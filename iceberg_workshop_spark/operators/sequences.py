@@ -22,23 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
-
-_P = "iws_seq_"
-
-
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        load(spark, sf_dir, n).createOrReplaceTempView(f"{_P}{n}")
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 
 def _sql(tpl: str) -> str:
-    return tpl.format(t="")
-
-
-def _spark_sql(spark: SparkSession, sf_dir: str, tpl: str, *tables: str) -> DataFrame:
-    _views(spark, sf_dir, *tables)
-    return spark.sql(tpl.format(t=_P))
+    return tpl.format(**FIXTURE_VIEWS)
 
 
 _ISLANDS = """
@@ -48,7 +36,7 @@ WITH seq AS (
                             ORDER BY ts, event_id) AS rn,
          ROW_NUMBER() OVER (PARTITION BY user_id, event_type
                             ORDER BY ts, event_id) AS rn_t
-  FROM {t}events
+  FROM {events}
 ),
 islands AS (
   SELECT user_id, event_type, rn - rn_t AS grp, COUNT(*) AS run_len
@@ -68,7 +56,7 @@ def q_win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-row-number difference trick, then run-length stats. Both
     windows share one (user_id)-hash shuffle; the island GROUP BY is
     all-integer so no float can flip a run boundary."""
-    return _spark_sql(spark, sf_dir, _ISLANDS, "events")
+    return fixture_sql(spark, sf_dir, _ISLANDS)
 
 
 _SCD2 = """
@@ -76,7 +64,7 @@ WITH h AS (
   SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
          LAG(o_orderstatus) OVER (PARTITION BY o_custkey
                                   ORDER BY o_orderdate, o_orderkey) AS prev
-  FROM {t}orders
+  FROM {orders}
 ),
 chg AS (
   SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey
@@ -105,7 +93,7 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     (custkey, orderdate, orderkey) sort, so Spark plans ONE shuffle +
     ONE sort for the whole history build; at 100 TB that is the
     minimum possible movement for this semantics."""
-    return _spark_sql(spark, sf_dir, _SCD2, "orders")
+    return fixture_sql(spark, sf_dir, _SCD2)
 
 
 _TRANSITIONS = """
@@ -113,7 +101,7 @@ WITH seq AS (
   SELECT user_id, event_type,
          LEAD(event_type) OVER (PARTITION BY user_id
                                 ORDER BY ts, event_id) AS next_type
-  FROM {t}events
+  FROM {events}
 ),
 pairs AS (
   SELECT event_type, next_type, COUNT(*) AS n
@@ -136,13 +124,13 @@ def q_win_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize to row-stochastic probabilities. The transition count
     table is |types|² rows, so the normalizing window runs on a
     trivially small relation regardless of input scale."""
-    return _spark_sql(spark, sf_dir, _TRANSITIONS, "events")
+    return fixture_sql(spark, sf_dir, _TRANSITIONS)
 
 
 _CUMULATIVE = """
 WITH first_seen AS (
   SELECT user_id, date_trunc('day', MIN(ts)) AS first_day
-  FROM {t}events GROUP BY user_id
+  FROM {events} GROUP BY user_id
 ),
 daily AS (
   SELECT first_day, COUNT(*) AS new_users FROM first_seen GROUP BY first_day
@@ -192,7 +180,7 @@ _SESSIONIZE = """
 WITH seq AS (
   SELECT user_id, ts, event_id, date_trunc('second', ts) AS tss,
          CASE WHEN {gap} IS NULL OR {gap} >= 1800 THEN 1 ELSE 0 END AS is_new
-  FROM {t}events
+  FROM {events}
 ),
 sess AS (
   SELECT user_id, tss,
@@ -225,7 +213,7 @@ _SESS_DUR_DUCK = "date_diff('second', MIN(tss), MAX(tss))"
 
 @register(
     "q_win_sessionize",
-    oracle=_SESSIONIZE.format(t="", gap=_SESS_GAP_DUCK, dur=_SESS_DUR_DUCK),
+    oracle=_SESSIONIZE.format(**FIXTURE_VIEWS, gap=_SESS_GAP_DUCK, dur=_SESS_DUR_DUCK),
 )
 def q_win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization with a 30-minute inactivity gap — the
@@ -239,21 +227,20 @@ def q_win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     second-truncated BEFORE differencing so Spark's timestampdiff and
     DuckDB's date_diff agree on whole seconds (q_join_interval_overlap
     convention)."""
-    return _spark_sql(
+    return fixture_sql(
         spark,
         sf_dir,
         _SESSIONIZE.replace("{gap}", _SESS_GAP_SPARK).replace(
             "{dur}", _SESS_DUR_SPARK
         ),
-        "events",
     )
 
 
 _HEAVY = """
 WITH tot AS (SELECT COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users
-             FROM {t}events),
+             FROM {events}),
 by_user AS (
-  SELECT user_id, COUNT(*) AS cnt FROM {t}events GROUP BY user_id
+  SELECT user_id, COUNT(*) AS cnt FROM {events} GROUP BY user_id
 )
 SELECT u.user_id, u.cnt,
        round(CAST(u.cnt AS DOUBLE) / CAST(t.n AS DOUBLE), 4) AS share
@@ -271,7 +258,7 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the selection boundary. One groupBy on user_id plus a broadcast
     2-value scalar; the approximate counterpart is q_agg_approx_cd's
     sketch family."""
-    return _spark_sql(spark, sf_dir, _HEAVY, "events")
+    return fixture_sql(spark, sf_dir, _HEAVY)
 
 
 _OVERLAP = """
@@ -279,7 +266,7 @@ WITH sess AS (
   SELECT user_id, date_trunc('day', ts) AS day,
          date_trunc('second', MIN(ts)) AS s,
          date_trunc('second', MAX(ts)) AS e
-  FROM {t}events WHERE user_id % 7 = 0
+  FROM {events} WHERE user_id % 7 = 0
   GROUP BY user_id, date_trunc('day', ts)
 ),
 pairs AS (
@@ -303,7 +290,7 @@ _DIFF_SPARK = "timestampdiff(SECOND, GREATEST(a.s, b.s), LEAST(a.e, b.e))"
 
 
 @register("q_join_interval_overlap",
-          oracle=_OVERLAP.format(t="", diff=_DIFF_DUCK))
+          oracle=_OVERLAP.format(**FIXTURE_VIEWS, diff=_DIFF_DUCK))
 def q_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap join: per-user daily activity intervals
     [first event, last event], pairwise overlap seconds between users
@@ -312,16 +299,15 @@ def q_join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_join_range_banded applied to interval intersection). Endpoints
     are second-truncated BEFORE differencing so Spark's timestampdiff
     and DuckDB's date_diff agree on whole seconds."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_OVERLAP.format(t=_P, diff=_DIFF_SPARK))
+    return fixture_sql(spark, sf_dir, _OVERLAP.replace("{diff}", _DIFF_SPARK))
 
 
 _GAP_FILL = """
-WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM {t}events),
-users AS (SELECT DISTINCT user_id FROM {t}events WHERE user_id % 11 = 0),
+WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM {events}),
+users AS (SELECT DISTINCT user_id FROM {events} WHERE user_id % 11 = 0),
 daily AS (
   SELECT user_id, date_trunc('day', ts) AS day, COUNT(*) AS n
-  FROM {t}events WHERE user_id % 11 = 0
+  FROM {events} WHERE user_id % 11 = 0
   GROUP BY user_id, date_trunc('day', ts)
 ),
 grid AS (
@@ -348,7 +334,7 @@ _LA_DUCK = (
 
 
 @register("q_win_gap_fill",
-          oracle=_GAP_FILL.format(t="", last_active=_LA_DUCK))
+          oracle=_GAP_FILL.format(**FIXTURE_VIEWS, last_active=_LA_DUCK))
 def q_win_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap fill: a dense user×day grid (cross join of the
     observed day spine with a user sample), daily counts left-joined
@@ -357,14 +343,15 @@ def q_win_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; the only real shuffle is the per-user daily aggregate.
     Forward-fill state is one value per user — constant window
     memory at any scale."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_GAP_FILL.format(t=_P, last_active=_LA_SPARK))
+    return fixture_sql(
+        spark, sf_dir, _GAP_FILL.replace("{last_active}", _LA_SPARK)
+    )
 
 
 _ROLLING_DISTINCT = """
-WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM {t}events),
+WITH days AS (SELECT DISTINCT date_trunc('day', ts) AS day FROM {events}),
 user_days AS (
-  SELECT DISTINCT date_trunc('day', ts) AS uday, user_id FROM {t}events
+  SELECT DISTINCT date_trunc('day', ts) AS uday, user_id FROM {events}
 )
 SELECT d.day, COUNT(DISTINCT u.user_id) AS users_7d
 FROM days d
@@ -375,7 +362,7 @@ ORDER BY d.day
 """
 
 
-@register("q_win_rolling_distinct", oracle=_ROLLING_DISTINCT.format(t=""))
+@register("q_win_rolling_distinct", oracle=_ROLLING_DISTINCT.format(**FIXTURE_VIEWS))
 def q_win_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day distinct active users per day. A rolling
     range-window COUNT(DISTINCT) has no bounded-state form, so the
@@ -385,8 +372,7 @@ def q_win_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. The quadratic part only ever sees the collapsed relation;
     at 100 TB that is the difference between re-scanning the stream
     per day and joining two small day-keyed tables."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_ROLLING_DISTINCT.format(t=_P))
+    return fixture_sql(spark, sf_dir, _ROLLING_DISTINCT)
 
 
 _EWMA = """
@@ -394,7 +380,7 @@ WITH seq AS (
   SELECT user_id, event_id,
          CAST(ROUND(value * 100) AS BIGINT) AS cents,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM {t}events
+  FROM {events}
 ),
 weighted AS (
   SELECT a.user_id, a.rn AS rn_a,
@@ -429,14 +415,14 @@ def q_win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, lag ≤ 15) shuffles once on user_id and each window tail
     stays within its user partition — at 100 TB this is a bounded-fan
     join, not a window over unbounded history."""
-    return _spark_sql(spark, sf_dir, _EWMA, "events")
+    return fixture_sql(spark, sf_dir, _EWMA)
 
 
 _INTERP = """
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
          CAST(SUM(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM {t}events GROUP BY event_type, date_trunc('day', ts)
+  FROM {events} GROUP BY event_type, date_trunc('day', ts)
 ),
 seq AS (
   SELECT event_type, day, cents,
@@ -486,7 +472,7 @@ def _interp_sql(spark_dialect: bool) -> str:
         last, first = "last_value({0} IGNORE NULLS)", "first_value({0} IGNORE NULLS)"
         dd = "date_diff('day', {0}, {1})"
     return _INTERP.format(
-        t="{t}",
+        events="{events}",
         prev_c=last.format("kc") + " " + _ITP_FRAME_PREV,
         prev_d=last.format("kd") + " " + _ITP_FRAME_PREV,
         next_c=first.format("kc") + " " + _ITP_FRAME_NEXT,
@@ -515,14 +501,14 @@ def q_win_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor lookups share one (event_type, day) sort → a single
     partitioned WindowExec; at 100 TB gap repair costs one window pass
     over the pre-aggregated daily rollup, never the raw events."""
-    return _spark_sql(spark, sf_dir, _interp_sql(True), "events")
+    return fixture_sql(spark, sf_dir, _interp_sql(True))
 
 
 _ANOMALY = """
 WITH e AS (
   SELECT user_id, ts, event_id,
          CAST(floor(value * 100) AS BIGINT) AS cents
-  FROM {t}events
+  FROM {events}
 ),
 w AS (
   SELECT user_id, cents,
@@ -562,14 +548,14 @@ def q_win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums share one (user, ts, event_id) sort -> a single partitioned
     WindowExec with O(1) per-row state; at 100 TB anomaly screening is
     one shuffle by user."""
-    return _spark_sql(spark, sf_dir, _ANOMALY, "events")
+    return fixture_sql(spark, sf_dir, _ANOMALY)
 
 
 _DRAWDOWN = """
 WITH e AS (
   SELECT user_id, ts, event_id,
          CAST(floor(value * 100) AS BIGINT) AS cents
-  FROM {t}events
+  FROM {events}
 ),
 cum AS (
   SELECT user_id, ts, event_id,
@@ -602,7 +588,7 @@ def q_win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final groupBy share one (user_id, ts, event_id) sort →
     ONE shuffle, O(1) window state per row; pure integer arithmetic
     end to end, so both engines agree exactly."""
-    return _spark_sql(spark, sf_dir, _DRAWDOWN, "events")
+    return fixture_sql(spark, sf_dir, _DRAWDOWN)
 
 
 _CUSUM = """
@@ -611,7 +597,7 @@ WITH seq AS (
          CAST(floor(value * 100) AS BIGINT) AS cents,
          ROW_NUMBER() OVER (PARTITION BY user_id
                             ORDER BY ts, event_id) AS k
-  FROM {t}events
+  FROM {events}
 ),
 tot AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
@@ -663,4 +649,4 @@ def q_win_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmax via max-then-min-k joins rather than any global window.
     Integer cents end to end, so both engines agree bit-for-bit on
     statistic AND split position."""
-    return _spark_sql(spark, sf_dir, _CUSUM, "events")
+    return fixture_sql(spark, sf_dir, _CUSUM)

@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
-
-_P = "iws_sk_"
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 # Three independent 32-bit draws from one md5 digest: hex digits
 # [1+8i, 8] for hash index i ∈ {0,1,2} (a column, so substr gets an
@@ -48,7 +46,7 @@ def _bloom_sql(hexint: str, intdiv: str) -> str:
 WITH hashes AS ({_HASH_IDX}),
 members AS (
   SELECT DISTINCT s.s_suppkey AS k
-  FROM {{t}}supplier s JOIN {{t}}nation n ON s.s_nationkey = n.n_nationkey
+  FROM {{supplier}} s JOIN {{nation}} n ON s.s_nationkey = n.n_nationkey
   WHERE n.n_regionkey = 1
 ),
 mb AS (
@@ -63,7 +61,7 @@ filter_words AS (
 probes AS (
   SELECT s.s_suppkey AS k,
          CASE WHEN n.n_regionkey = 1 THEN 'member' ELSE 'non_member' END AS cls
-  FROM {{t}}supplier s JOIN {{t}}nation n ON s.s_nationkey = n.n_nationkey
+  FROM {{supplier}} s JOIN {{nation}} n ON s.s_nationkey = n.n_nationkey
 ),
 pb AS (
   SELECT p.k, p.cls, ({pslot}) AS slot
@@ -83,7 +81,7 @@ FROM tests GROUP BY cls ORDER BY cls
 """
 
 
-@register("q_sketch_bloom", oracle=_bloom_sql(_HEX_DUCK, "//").format(t=""))
+@register("q_sketch_bloom", oracle=_bloom_sql(_HEX_DUCK, "//").format(**FIXTURE_VIEWS))
 def q_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership over region-1 supplier keys: 4096 bits
     as 128 32-bit words, 3 md5-derived hash functions. Build = one
@@ -92,9 +90,7 @@ def q_sketch_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     three bits set. Members must all hit — the result proves zero
     false negatives — and non-member hits are the deterministic
     false-positive count."""
-    for n in ("supplier", "nation"):
-        load(spark, sf_dir, n).createOrReplaceTempView(f"{_P}{n}")
-    return spark.sql(_bloom_sql(_HEX_SPARK, " div ").format(t=_P))
+    return fixture_sql(spark, sf_dir, _bloom_sql(_HEX_SPARK, " div "))
 
 
 _CM_WIDTH = 64
@@ -108,11 +104,11 @@ def _countmin_sql(hexint: str) -> str:
 WITH hashes AS ({_CM_DEPTH_HASHES}),
 cells AS (
   SELECT h.i AS row_i, ({eslot}) AS col, COUNT(*) AS cnt
-  FROM {{t}}events e CROSS JOIN hashes h
+  FROM {{events}} e CROSS JOIN hashes h
   GROUP BY h.i, ({eslot})
 ),
 exact AS (
-  SELECT user_id, COUNT(*) AS true_cnt FROM {{t}}events GROUP BY user_id
+  SELECT user_id, COUNT(*) AS true_cnt FROM {{events}} GROUP BY user_id
 ),
 est AS (
   SELECT q.user_id, q.true_cnt,
@@ -131,7 +127,7 @@ FROM est
 """
 
 
-@register("q_sketch_countmin", oracle=_countmin_sql(_HEX_DUCK).format(t=""))
+@register("q_sketch_countmin", oracle=_countmin_sql(_HEX_DUCK).format(**FIXTURE_VIEWS))
 def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min frequency sketch (depth 3 × width 64) over the event
     user stream, queried for every user and compared against exact
@@ -139,8 +135,7 @@ def q_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells regardless of stream size. The summary certifies the CM
     guarantee: zero underestimates, overestimates only from hash
     collisions (both counts deterministic via md5)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView(f"{_P}events")
-    return spark.sql(_countmin_sql(_HEX_SPARK).format(t=_P))
+    return fixture_sql(spark, sf_dir, _countmin_sql(_HEX_SPARK))
 
 
 def _histq_sql() -> str:
@@ -151,13 +146,13 @@ def _histq_sql() -> str:
 WITH hist AS (
   SELECT CAST(floor(o_totalprice / 2000) AS BIGINT) AS bucket,
          COUNT(*) AS cnt
-  FROM {t}orders
+  FROM {orders}
   GROUP BY CAST(floor(o_totalprice / 2000) AS BIGINT)
 ),
 cum AS (
   SELECT bucket, cnt,
          CAST(SUM(cnt) OVER (ORDER BY bucket) AS BIGINT) AS running,
-         (SELECT COUNT(*) FROM {t}orders) AS total
+         (SELECT COUNT(*) FROM {orders}) AS total
   FROM hist
 )
 SELECT q.pct,
@@ -170,7 +165,7 @@ ORDER BY q.pct
 """
 
 
-@register("q_sketch_hist_quantile", oracle=_histq_sql().format(t=""))
+@register("q_sketch_hist_quantile", oracle=_histq_sql().format(**FIXTURE_VIEWS))
 def q_sketch_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram quantile sketch: bucket order totals into
     2000-unit bins (integer floor division — exact in both engines),
@@ -223,7 +218,7 @@ def _bloom_merge_sql(hexint: str, intdiv: str) -> str:
     return f"""
 WITH hashes AS ({_HASH_IDX}),
 members AS (
-  SELECT s_suppkey AS k, s_suppkey % 2 AS shard FROM {{t}}supplier
+  SELECT s_suppkey AS k, s_suppkey % 2 AS shard FROM {{supplier}}
 ),
 mb AS (
   SELECT m.shard, ({slot}) AS slot FROM members m CROSS JOIN hashes h
@@ -251,7 +246,7 @@ FROM merged m JOIN global g ON m.word = g.word
 
 @register(
     "q_sketch_bloom_merge",
-    oracle=_bloom_merge_sql(_HEX_DUCK, "//").format(t=""),
+    oracle=_bloom_merge_sql(_HEX_DUCK, "//").format(**FIXTURE_VIEWS),
 )
 def q_sketch_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch mergeability, PROVEN rather than claimed: build one
@@ -261,8 +256,7 @@ def q_sketch_bloom_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     every word must match. This is the algebraic property that lets
     100 TB sketch builds run as tree-reduced partial aggregates with
     no row ever leaving its partition."""
-    load(spark, sf_dir, "supplier").createOrReplaceTempView(f"{_P}supplier")
-    return spark.sql(_bloom_merge_sql(_HEX_SPARK, " div ").format(t=_P))
+    return fixture_sql(spark, sf_dir, _bloom_merge_sql(_HEX_SPARK, " div "))
 
 
 @register(

@@ -25,9 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
-
-_P = "iws_th_"
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql
 
 
 def _rev(prefix: str = "") -> str:
@@ -41,33 +39,23 @@ def _rev(prefix: str = "") -> str:
     )
 
 
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        load(spark, sf_dir, n).createOrReplaceTempView(f"{_P}{n}")
-
-
 def _sql(tpl: str) -> str:
     """Oracle SQL (bare fixture view names)."""
-    return tpl.format(t="")
-
-
-def _spark_sql(spark: SparkSession, sf_dir: str, tpl: str, *tables: str) -> DataFrame:
-    _views(spark, sf_dir, *tables)
-    return spark.sql(tpl.format(t=_P))
+    return tpl.format(**FIXTURE_VIEWS)
 
 
 _Q2 = f"""
 WITH ps AS (
   SELECT l_partkey, l_suppkey, SUM({_rev()}) AS cost
-  FROM {{t}}lineitem GROUP BY l_partkey, l_suppkey
+  FROM {{lineitem}} GROUP BY l_partkey, l_suppkey
 ),
 mn AS (SELECT l_partkey, MIN(cost) AS min_cost FROM ps GROUP BY l_partkey)
 SELECT p.p_partkey, p.p_brand, s.s_suppkey, s.s_name,
        CAST(ps.cost AS DOUBLE) AS cost
 FROM ps
 JOIN mn ON ps.l_partkey = mn.l_partkey AND ps.cost = mn.min_cost
-JOIN {{t}}part p ON p.p_partkey = ps.l_partkey AND p.p_size <= 10
-JOIN {{t}}supplier s ON s.s_suppkey = ps.l_suppkey
+JOIN {{part}} p ON p.p_partkey = ps.l_partkey AND p.p_size <= 10
+JOIN {{supplier}} s ON s.s_suppkey = ps.l_suppkey
 ORDER BY p.p_partkey, s.s_suppkey
 """
 
@@ -79,7 +67,7 @@ def q_join_q2_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-part MIN re-aggregates the *already reduced* pair table
     and joins back on exact DECIMAL equality — ties surface every
     minimal supplier deterministically. part/supplier dims broadcast."""
-    return _spark_sql(spark, sf_dir, _Q2, "lineitem", "part", "supplier")
+    return fixture_sql(spark, sf_dir, _Q2)
 
 
 _Q8 = f"""
@@ -88,13 +76,13 @@ WITH rev AS (
          CAST(SUM(CASE WHEN sn.n_name = 'NATION_3' THEN {_rev("l.")}
                        ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS nation_rev,
          CAST(SUM({_rev("l.")}) AS DOUBLE) AS total_rev
-  FROM {{t}}lineitem l
-  JOIN {{t}}orders o ON l.l_orderkey = o.o_orderkey
-  JOIN {{t}}customer c ON o.o_custkey = c.c_custkey
-  JOIN {{t}}nation cn ON c.c_nationkey = cn.n_nationkey
-  JOIN {{t}}region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'AMERICA'
-  JOIN {{t}}supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN {{t}}nation sn ON s.s_nationkey = sn.n_nationkey
+  FROM {{lineitem}} l
+  JOIN {{orders}} o ON l.l_orderkey = o.o_orderkey
+  JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+  JOIN {{nation}} cn ON c.c_nationkey = cn.n_nationkey
+  JOIN {{region}} r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'AMERICA'
+  JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey
+  JOIN {{nation}} sn ON s.s_nationkey = sn.n_nationkey
   GROUP BY year(o.o_orderdate)
 )
 SELECT yr, nation_rev, total_rev,
@@ -111,18 +99,15 @@ def q_join_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier→nation) broadcasts; the only shuffles are fact⋈orders and
     the final tiny per-year aggregate. Share is float division of two
     decimal-exact sums, rounded at 4 (the repo's AVG convention)."""
-    return _spark_sql(
-        spark, sf_dir, _Q8,
-        "lineitem", "orders", "customer", "nation", "region", "supplier",
-    )
+    return fixture_sql(spark, sf_dir, _Q8)
 
 
 _Q11 = f"""
 WITH nrev AS (
   SELECT sn.n_name AS nation, SUM({_rev("l.")}) AS rev
-  FROM {{t}}lineitem l
-  JOIN {{t}}supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN {{t}}nation sn ON s.s_nationkey = sn.n_nationkey
+  FROM {{lineitem}} l
+  JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey
+  JOIN {{nation}} sn ON s.s_nationkey = sn.n_nationkey
   GROUP BY sn.n_name
 ),
 tot AS (SELECT SUM(rev) AS total FROM nrev)
@@ -140,14 +125,14 @@ def q_agg_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality ``rev * 25 > total`` — no float division at the
     boundary. The grand total is a scalar subquery over the already
     25-row nation aggregate, so the second pass is free."""
-    return _spark_sql(spark, sf_dir, _Q11, "lineitem", "supplier", "nation")
+    return fixture_sql(spark, sf_dir, _Q11)
 
 
 _Q13 = """
 WITH c_orders AS (
   SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-  FROM {t}customer c
-  LEFT JOIN {t}orders o
+  FROM {customer} c
+  LEFT JOIN {orders} o
     ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
   GROUP BY c.c_custkey
 )
@@ -165,7 +150,7 @@ def q_agg_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     (predicate inside the ON clause, not WHERE — semantics differ).
     Two all-integer aggregations; the second groups ~50 distinct
     counts so it collapses to a near-free final shuffle."""
-    return _spark_sql(spark, sf_dir, _Q13, "customer", "orders")
+    return fixture_sql(spark, sf_dir, _Q13)
 
 
 _Q14 = f"""
@@ -174,8 +159,8 @@ WITH r AS (
          CAST(SUM(CASE WHEN p.p_type = 'PROMO' THEN {_rev("l.")}
                        ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS promo_rev,
          CAST(SUM({_rev("l.")}) AS DOUBLE) AS total_rev
-  FROM {{t}}lineitem l
-  JOIN {{t}}part p ON l.l_partkey = p.p_partkey
+  FROM {{lineitem}} l
+  JOIN {{part}} p ON l.l_partkey = p.p_partkey
   GROUP BY year(l.l_shipdate)
 )
 SELECT yr, promo_rev, total_rev,
@@ -189,18 +174,18 @@ def q_agg_q14_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: PROMO-type revenue share per ship year —
     conditional aggregate over a broadcast part join. The ratio is
     computed once per year row from two decimal-exact sums."""
-    return _spark_sql(spark, sf_dir, _Q14, "lineitem", "part")
+    return fixture_sql(spark, sf_dir, _Q14)
 
 
 _Q15 = f"""
 WITH srev AS (
   SELECT l_suppkey, SUM({_rev()}) AS total_rev
-  FROM {{t}}lineitem
+  FROM {{lineitem}}
   WHERE l_shipdate >= '1995-01-01' AND l_shipdate < '1995-04-01'
   GROUP BY l_suppkey
 )
 SELECT s.s_suppkey, s.s_name, CAST(sr.total_rev AS DOUBLE) AS total_rev
-FROM {{t}}supplier s
+FROM {{supplier}} s
 JOIN srev sr ON s.s_suppkey = sr.l_suppkey
 WHERE sr.total_rev = (SELECT MAX(total_rev) FROM srev)
 ORDER BY s.s_suppkey
@@ -214,20 +199,20 @@ def q_join_q15_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputed) for the equality filter. Exact DECIMAL equality keeps
     ties deterministic. The quarter predicate reaches the parquet scan
     as a pushed filter before any shuffle."""
-    return _spark_sql(spark, sf_dir, _Q15, "lineitem", "supplier")
+    return fixture_sql(spark, sf_dir, _Q15)
 
 
 _Q17 = """
 WITH pq AS (
   SELECT l_partkey, COUNT(*) AS cnt,
          SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qty_sum
-  FROM {t}lineitem GROUP BY l_partkey
+  FROM {lineitem} GROUP BY l_partkey
 )
 SELECT COUNT(*) AS n_small,
        CAST(COALESCE(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))),
                      CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS small_rev
-FROM {t}lineitem l
-JOIN {t}part p ON p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
+FROM {lineitem} l
+JOIN {part} p ON p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#12'
 JOIN pq ON pq.l_partkey = l.l_partkey
 WHERE CAST(l.l_quantity AS DECIMAL(18,2)) * 5 * pq.cnt < pq.qty_sum
 """
@@ -240,15 +225,15 @@ def q_agg_q17_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated AVG threshold is decorrelated by hand into one grouped
     CTE and the float comparison ``qty < 0.2 * avg`` becomes the exact
     decimal-integer inequality ``qty * 5 * cnt < qty_sum``."""
-    return _spark_sql(spark, sf_dir, _Q17, "lineitem", "part")
+    return fixture_sql(spark, sf_dir, _Q17)
 
 
 _Q19 = f"""
 SELECT COUNT(*) AS n_rows,
        CAST(COALESCE(SUM({_rev("l.")}),
                      CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-FROM {{t}}lineitem l
-JOIN {{t}}part p ON p.p_partkey = l.l_partkey
+FROM {{lineitem}} l
+JOIN {{part}} p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
        AND l.l_quantity >= 1 AND l.l_quantity <= 11)
    OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
@@ -265,20 +250,20 @@ def q_filter_q19_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates per side (brand∈{...}, size≤35, quantity bounds) and
     pushes them below the join into both parquet scans, so the OR does
     not defeat pushdown — the join sees pre-filtered inputs."""
-    return _spark_sql(spark, sf_dir, _Q19, "lineitem", "part")
+    return fixture_sql(spark, sf_dir, _Q19)
 
 
 _Q22 = """
 WITH avg_bal AS (
   SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS total, COUNT(*) AS cnt
-  FROM {t}customer WHERE c_acctbal > 0
+  FROM {customer} WHERE c_acctbal > 0
 )
 SELECT substring(c.c_name, 16, 3) AS code,
        COUNT(*) AS numcust,
        CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-FROM {t}customer c, avg_bal
+FROM {customer} c, avg_bal
 WHERE CAST(c.c_acctbal AS DECIMAL(18,2)) * avg_bal.cnt > avg_bal.total
-  AND NOT EXISTS (SELECT 1 FROM {t}orders o
+  AND NOT EXISTS (SELECT 1 FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderdate >= '1999-01-01')
 GROUP BY substring(c.c_name, 16, 3)
@@ -294,17 +279,17 @@ def q_agg_q22_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date-filtered orders slice), grouped
     by a name-derived code. The global average is one broadcast scalar;
     the anti join shuffles on custkey exactly once."""
-    return _spark_sql(spark, sf_dir, _Q22, "customer", "orders")
+    return fixture_sql(spark, sf_dir, _Q22)
 
 
 _Q3 = f"""
 SELECT l.l_orderkey,
        CAST(SUM({_rev("l.")}) AS DOUBLE) AS revenue,
        o.o_orderdate, o.o_orderpriority
-FROM {{t}}customer c
-JOIN {{t}}orders o ON c.c_custkey = o.o_custkey
+FROM {{customer}} c
+JOIN {{orders}} o ON c.c_custkey = o.o_custkey
                    AND c.c_mktsegment = 'BUILDING'
-JOIN {{t}}lineitem l ON l.l_orderkey = o.o_orderkey
+JOIN {{lineitem}} l ON l.l_orderkey = o.o_orderkey
 WHERE o.o_orderdate < TIMESTAMP '1995-03-15'
   AND l.l_shipdate > TIMESTAMP '1995-03-15'
 GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
@@ -319,15 +304,15 @@ def q_join_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both date predicates push into their scans before the joins; the
     top-k over the grouped result plans as TakeOrderedAndProject, so
     only 10 rows ever reach the driver side of the limit."""
-    return _spark_sql(spark, sf_dir, _Q3, "customer", "orders", "lineitem")
+    return fixture_sql(spark, sf_dir, _Q3)
 
 
 _Q4 = """
 SELECT o.o_orderpriority, COUNT(*) AS order_count
-FROM {t}orders o
+FROM {orders} o
 WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
   AND o.o_orderdate <  TIMESTAMP '1995-04-01'
-  AND EXISTS (SELECT 1 FROM {t}lineitem l
+  AND EXISTS (SELECT 1 FROM {lineitem} l
               WHERE l.l_orderkey = o.o_orderkey
                 AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
 GROUP BY o.o_orderpriority
@@ -343,14 +328,14 @@ def q_agg_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     column inside the subquery; Catalyst still decorrelates it to one
     left-semi join on orderkey with the date arithmetic as the join
     filter."""
-    return _spark_sql(spark, sf_dir, _Q4, "orders", "lineitem")
+    return fixture_sql(spark, sf_dir, _Q4)
 
 
 _Q6 = """
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
               * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue_delta,
        COUNT(*) AS n_lines
-FROM {t}lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1995-01-01'
   AND l_shipdate <  TIMESTAMP '1996-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
@@ -365,7 +350,7 @@ def q_agg_q6_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The discount band compares doubles to the same parsed
     literals in both engines (0.05/0.07 parse to identical float64),
     and the money product is decimal-exact per factor."""
-    return _spark_sql(spark, sf_dir, _Q6, "lineitem")
+    return fixture_sql(spark, sf_dir, _Q6)
 
 
 _Q9 = f"""
@@ -373,11 +358,11 @@ SELECT sn.n_name AS nation, year(o.o_orderdate) AS yr,
        CAST(SUM({_rev("l.")}
                 - CAST(l.l_quantity AS DECIMAL(18,2))
                   * CAST(10 AS DECIMAL(18,2))) AS DOUBLE) AS profit
-FROM {{t}}lineitem l
-JOIN {{t}}part p ON p.p_partkey = l.l_partkey AND p.p_name LIKE '%gear%'
-JOIN {{t}}supplier s ON s.s_suppkey = l.l_suppkey
-JOIN {{t}}nation sn ON sn.n_nationkey = s.s_nationkey
-JOIN {{t}}orders o ON o.o_orderkey = l.l_orderkey
+FROM {{lineitem}} l
+JOIN {{part}} p ON p.p_partkey = l.l_partkey AND p.p_name LIKE '%gear%'
+JOIN {{supplier}} s ON s.s_suppkey = l.l_suppkey
+JOIN {{nation}} sn ON sn.n_nationkey = s.s_nationkey
+JOIN {{orders}} o ON o.o_orderkey = l.l_orderkey
 GROUP BY sn.n_name, year(o.o_orderdate)
 ORDER BY nation, yr
 """
@@ -390,20 +375,18 @@ def q_agg_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp). The part-name LIKE prunes the fact rows through the
     broadcast part join before any wide aggregation; profit stays in
     exact decimal until the final cast."""
-    return _spark_sql(
-        spark, sf_dir, _Q9, "lineitem", "part", "supplier", "nation", "orders"
-    )
+    return fixture_sql(spark, sf_dir, _Q9)
 
 
 _Q10 = f"""
 SELECT c.c_custkey, c.c_name, n.n_name AS nation,
        CAST(SUM({_rev("l.")}) AS DOUBLE) AS lost_revenue
-FROM {{t}}customer c
-JOIN {{t}}orders o ON o.o_custkey = c.c_custkey
+FROM {{customer}} c
+JOIN {{orders}} o ON o.o_custkey = c.c_custkey
   AND o.o_orderdate >= TIMESTAMP '1995-10-01'
   AND o.o_orderdate <  TIMESTAMP '1996-01-01'
-JOIN {{t}}lineitem l ON l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
-JOIN {{t}}nation n ON n.n_nationkey = c.c_nationkey
+JOIN {{lineitem}} l ON l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R'
+JOIN {{nation}} n ON n.n_nationkey = c.c_nationkey
 GROUP BY c.c_custkey, c.c_name, n.n_name
 ORDER BY lost_revenue DESC, c.c_custkey
 LIMIT 20
@@ -416,9 +399,7 @@ def q_join_q10_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one quarter. Return-flag and date predicates prune both fact
     inputs at the scan; the customer/nation dims broadcast; top-k is
     TakeOrderedAndProject with the custkey tiebreak."""
-    return _spark_sql(
-        spark, sf_dir, _Q10, "customer", "orders", "lineitem", "nation"
-    )
+    return fixture_sql(spark, sf_dir, _Q10)
 
 
 _Q12 = """
@@ -427,8 +408,8 @@ SELECT l.l_linestatus AS mode,
                      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
                      THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM {t}orders o
-JOIN {t}lineitem l ON o.o_orderkey = l.l_orderkey
+FROM {orders} o
+JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
 WHERE l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
   AND l.l_shipdate >= TIMESTAMP '1996-01-01'
   AND l.l_shipdate <  TIMESTAMP '1997-01-01'
@@ -443,17 +424,17 @@ def q_agg_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     status (shipmode adapted to the schema). The join-dependent date
     comparison stays as a join filter; the two conditional counts are
     one pass over the joined rows."""
-    return _spark_sql(spark, sf_dir, _Q12, "orders", "lineitem")
+    return fixture_sql(spark, sf_dir, _Q12)
 
 
 _Q16 = """
 SELECT p.p_brand, p.p_type, p.p_size,
        COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM {t}lineitem l
-JOIN {t}part p ON p.p_partkey = l.l_partkey
+FROM {lineitem} l
+JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand <> 'Brand#5'
   AND p.p_size IN (1, 5, 9, 13, 17, 21, 25)
-  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM {t}supplier
+  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM {supplier}
                           WHERE s_name LIKE '%7')
 GROUP BY p.p_brand, p.p_type, p.p_size
 ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
@@ -466,17 +447,17 @@ def q_agg_q16_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     size) with a NOT IN exclusion subquery. NOT IN over a non-null
     key column plans as a broadcast null-aware anti join; the
     COUNT(DISTINCT) expands to the standard two-phase aggregate."""
-    return _spark_sql(spark, sf_dir, _Q16, "lineitem", "part", "supplier")
+    return fixture_sql(spark, sf_dir, _Q16)
 
 
 _Q20 = """
 SELECT s.s_name
-FROM {t}supplier s
-JOIN {t}nation n ON n.n_nationkey = s.s_nationkey AND n.n_regionkey = 1
+FROM {supplier} s
+JOIN {nation} n ON n.n_nationkey = s.s_nationkey AND n.n_regionkey = 1
 WHERE s.s_suppkey IN (
   SELECT l.l_suppkey
-  FROM {t}lineitem l
-  JOIN {t}part p ON p.p_partkey = l.l_partkey AND p.p_name LIKE 'red%'
+  FROM {lineitem} l
+  JOIN {part} p ON p.p_partkey = l.l_partkey AND p.p_name LIKE 'red%'
   WHERE l.l_shipdate >= TIMESTAMP '1995-01-01'
     AND l.l_shipdate <  TIMESTAMP '1996-01-01'
   GROUP BY l.l_suppkey, l.l_partkey
@@ -493,9 +474,7 @@ def q_join_q20_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     excess-stock pattern). The subquery reduces to (supp, part)
     totals before the semi join, so the outer side joins against an
     already-aggregated relation."""
-    return _spark_sql(
-        spark, sf_dir, _Q20, "supplier", "nation", "lineitem", "part"
-    )
+    return fixture_sql(spark, sf_dir, _Q20)
 
 
 _Q21 = """
@@ -503,12 +482,12 @@ WITH lo AS (
   SELECT l.l_orderkey, l.l_suppkey, o.o_orderstatus,
          CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY
               THEN 1 ELSE 0 END AS late
-  FROM {t}lineitem l JOIN {t}orders o ON l.l_orderkey = o.o_orderkey
+  FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
 )
 SELECT s.s_name, COUNT(*) AS numwait
 FROM lo l1
-JOIN {t}supplier s ON s.s_suppkey = l1.l_suppkey
-JOIN {t}nation n ON s.s_nationkey = n.n_nationkey AND n.n_regionkey = 2
+JOIN {supplier} s ON s.s_suppkey = l1.l_suppkey
+JOIN {nation} n ON s.s_nationkey = n.n_nationkey AND n.n_regionkey = 2
 WHERE l1.o_orderstatus = 'F' AND l1.late = 1
   AND EXISTS (SELECT 1 FROM lo l2
               WHERE l2.l_orderkey = l1.l_orderkey
@@ -529,6 +508,4 @@ def q_join_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair over the same derived relation. Lateness is precomputed once
     in an integer flag CTE so both correlated subqueries decorrelate
     to semi/anti joins on orderkey with no date math inside."""
-    return _spark_sql(
-        spark, sf_dir, _Q21, "lineitem", "orders", "supplier", "nation"
-    )
+    return fixture_sql(spark, sf_dir, _Q21)

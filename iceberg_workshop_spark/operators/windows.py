@@ -18,7 +18,7 @@ from pyspark.sql.window import Window as W
 
 from iceberg_workshop_spark.exprs import money
 from iceberg_workshop_spark.registry import register
-from iceberg_workshop_spark.sources.tables import load
+from iceberg_workshop_spark.sources.tables import FIXTURE_VIEWS, fixture_sql, load
 
 
 @register(
@@ -201,7 +201,7 @@ WITH f AS (
          CASE WHEN ROW_NUMBER() OVER (PARTITION BY o_orderstatus, o_custkey
                                       ORDER BY o_orderdate, o_orderkey) = 1
               THEN 1 ELSE 0 END AS first_seen
-  FROM {t}orders
+  FROM {orders}
 )
 SELECT o_orderstatus, o_orderkey,
        CAST(SUM(first_seen) OVER (PARTITION BY o_orderstatus
@@ -216,7 +216,7 @@ ORDER BY o_orderstatus, o_orderkey
 
 @register(
     "q_win_running_distinct",
-    oracle=_RUNNING_DISTINCT.format(t=""),
+    oracle=_RUNNING_DISTINCT.format(**FIXTURE_VIEWS),
 )
 def q_win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running COUNT(DISTINCT) over an ordered window — unsupported
@@ -226,15 +226,14 @@ def q_win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows sort by the same (status-prefixed) key, so the plan is one
     shuffle + sort; state per row is O(1). The same rewrite family as
     q_agg_cumulative_distinct, here at row grain."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("iws_win_orders")
-    return spark.sql(_RUNNING_DISTINCT.format(t="iws_win_"))
+    return fixture_sql(spark, sf_dir, _RUNNING_DISTINCT)
 
 
 _POP = """
 WITH monthly AS (
   SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mon,
          SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-  FROM {t}orders
+  FROM {orders}
   GROUP BY year(o_orderdate), month(o_orderdate)
 )
 SELECT yr, mon,
@@ -248,7 +247,7 @@ ORDER BY yr, mon
 """
 
 
-@register("q_win_period_over_period", oracle=_POP.format(t=""))
+@register("q_win_period_over_period", oracle=_POP.format(**FIXTURE_VIEWS))
 def q_win_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue growth: the dashboard staple — monthly
     decimal-exact totals, previous-period revenue, growth as a rounded

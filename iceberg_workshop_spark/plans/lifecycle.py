@@ -1253,10 +1253,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = orders.filter(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))
     delta = orders.filter(F.col("o_orderdate") >= F.lit(cutoff).cast("timestamp"))
 
-    hist.createOrReplaceTempView("iws_scd2_hist")
-    t = IceTable.create_as(
-        spark, loc, spark.sql(_SCD2_ROWS.format(src="iws_scd2_hist"))
-    )
+    t = IceTable.create_as(spark, loc, spark.sql(_SCD2_ROWS, src=hist))
 
     affected = delta.select("o_custkey").distinct()
     seeds = (
@@ -1270,8 +1267,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("valid_from").alias("o_orderdate"),
         )
     )
-    seeds.unionByName(delta).createOrReplaceTempView("iws_scd2_recompute")
-    src = spark.sql(_SCD2_ROWS.format(src="iws_scd2_recompute"))
+    src = spark.sql(_SCD2_ROWS, src=seeds.unionByName(delta))
     t.merge_into(src, on=["o_orderkey"])
     return t.read().orderBy("o_custkey", "valid_from", "o_orderkey")
 

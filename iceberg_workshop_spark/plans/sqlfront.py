@@ -17,6 +17,12 @@ the icetbl API (``merge_into``/``delete_where``/``insert_values``/
 the table's current snapshot. A workshop user can paste the exercises
 unchanged.
 
+Each ``IceSqlSession.sql`` call runs in one ``session.staged`` stage:
+the temp views a statement registers (tables, views, metadata tables,
+time-travel and pruned scans, the MERGE source) are dropped when it
+returns or raises. A returned DataFrame is already analyzed, so it
+does not need them.
+
 Scale notes: the front-end only *dispatches* — every statement lands
 on the same CoW/MoR DataFrame plans the Python API uses (file-granular
 rewrites, broadcast-where-small), so the 100 TB posture is inherited,
@@ -40,6 +46,7 @@ from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.icetbl import IceTable, spec_field
 from iceberg_workshop_spark.registry import register, require
+from iceberg_workshop_spark.session import staged
 
 _MERGE_HEAD_RE = re.compile(
     # the target alias takes an optional AS (standard SQL allows the
@@ -678,6 +685,9 @@ class IceSqlSession:
         # materialized views: name -> {src, base_sid, group, aggs, where}
         self.mviews: dict[str, dict] = {}
         self.location_map = dict(location_map or {})
+        # the running statement's stage: it owns every view registered
+        # for the statement (IceSqlSession.sql)
+        self._stage: staged | None = None
 
     def register_table(self, name: str, tbl: IceTable) -> None:
         self.tables[name] = tbl
@@ -687,7 +697,13 @@ class IceSqlSession:
 
     # -- dispatch ------------------------------------------------------
     def sql(self, text: str) -> DataFrame | None:
-        s = text.strip().rstrip(";").strip()
+        """Run one statement. The temp views it registers for table and
+        view names are dropped when it returns or raises; a returned
+        DataFrame is already analyzed, so it does not need them."""
+        with staged(self.spark) as self._stage:
+            return self._statement(text.strip().rstrip(";").strip())
+
+    def _statement(self, s: str) -> DataFrame | None:
         if m := _MERGE_HEAD_RE.match(s):
             return self._merge(m, s[m.end():])
         if m := _DELETE_RE.match(s):
@@ -993,37 +1009,12 @@ class IceSqlSession:
                 return self.location_map[prefix] + loc[len(prefix):]
         return loc
 
-    def _query(self, text: str) -> DataFrame:
-        """``spark.sql`` over registered names passed as DataFrame
-        parameters: the views Spark registers for them are dropped when
-        the call returns or raises, so none outlives the statement."""
-        bind: dict[str, DataFrame] = {}
-        # escape the statement's own braces; only the parameters that
-        # _rewrite substitutes are formatted
-        text = self._rewrite(text.replace("{", "{{").replace("}", "}}"), bind=bind)
-        return self.spark.sql(text, **bind) if bind else self.spark.sql(text.format())
-
-    def _rewrite(
-        self,
-        fragment: str,
-        preregistered: set[str] | None = None,
-        bind: dict[str, DataFrame] | None = None,
-    ) -> str:
+    def _rewrite(self, fragment: str, preregistered: set[str] | None = None) -> str:
         """Swap registered table/view names for temp views (tables get
         a view over their current snapshot; ``<table>.history`` etc.
         get the matching metadata table). Names in ``preregistered``
         are substituted without re-registering (a pruned scan view is
-        already bound). With ``bind``, no view is registered: each name
-        becomes a ``{param}`` placeholder and its DataFrame goes into
-        ``bind`` for ``spark.sql(text, **bind)``."""
-
-        def register(df: DataFrame, vname: str) -> str:
-            if bind is None:
-                df.createOrReplaceTempView(vname)
-                return vname
-            bind[f"v_{vname}"] = df
-            return f"{{v_{vname}}}"
-
+        already bound)."""
         for name in sorted({**self.views, **dict.fromkeys(self.tables)}, key=len, reverse=True):
             # Presence checks and substitution both ignore quoted
             # string literals — a table name used as a VALUE is data.
@@ -1040,9 +1031,9 @@ class IceSqlSession:
                     pat = r"(?<![\w.])" + re.escape(f"{name}.{suffix}") + r"(?![\w.])"
                     if not re.search(pat, stripped):
                         continue
-                    vname = register(
-                        self._meta_df(self.tables[name], suffix),
+                    vname = self._stage.view(
                         _view_name(name) + f"__{suffix}",
+                        self._meta_df(self.tables[name], suffix),
                     )
                     fragment = _sub_outside_quotes(pat, vname, fragment)
                     stripped = _QUOTED_SPAN.sub("''", fragment)
@@ -1050,7 +1041,7 @@ class IceSqlSession:
             if not re.search(pat, stripped):
                 continue
             df = self.views[name] if name in self.views else self.tables[name].read()
-            vname = register(df, _view_name(name))
+            vname = self._stage.view(_view_name(name), df)
             fragment = _sub_outside_quotes(pat, vname, fragment)
         return fragment
 
@@ -1306,7 +1297,9 @@ class IceSqlSession:
         salias = m["salias"] or (
             m["srcname"].split(".")[-1] if m["srcname"] else "__merge_src"
         )
-        src_df = self._query(m["src"] or f"SELECT * FROM {m['srcname']}")
+        src_df = self.spark.sql(
+            self._rewrite(m["src"] or f"SELECT * FROM {m['srcname']}")
+        )
         if m.group("evolve"):
             # MERGE WITH SCHEMA EVOLUTION: source columns absent from
             # the target are added (metadata-only) before the merge;
@@ -2051,9 +2044,7 @@ class IceSqlSession:
                 # Iceberg's Spark dialect: VERSION AS OF also takes a
                 # tag or branch name
                 df = tbl.read(ref=m["lit"])
-            vname = _view_name(m["name"]) + "__tt"
-            df.createOrReplaceTempView(vname)
-            return vname
+            return self._stage.view(_view_name(m["name"]) + "__tt", df)
 
         s = _TT_RE.sub(tt_repl, s)
         q_candidates, has_qualify = _rewrite_qualify(s)
@@ -2089,7 +2080,7 @@ class IceSqlSession:
                     except Exception:  # noqa: BLE001 — pruning is an
                         df = None  # optimization; never fail the query
                     if df is not None:
-                        df.createOrReplaceTempView(_view_name(name))
+                        self._stage.view(_view_name(name), df)
                         pruned.add(name)
         return self.spark.sql(self._rewrite(s, preregistered=pruned))
 
@@ -2369,7 +2360,7 @@ def q_sql_insert_overwrite_stmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sess = IceSqlSession(spark)
     sess.register_table("iws_ice.orders_by_yr", tbl)
-    orders.createOrReplaceTempView("orders_src")
+    sess.register_view("orders_src", orders)
     n_parts_before = len(
         {_hive_partition_str(f) for f in tbl.meta.current_files()}
     )
@@ -2873,23 +2864,24 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side row movement.)"""
     from iceberg_workshop_spark.sources.tables import load
 
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("iws_script_orders")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE t DOUBLE DEFAULT 1000.0;
-          WHILE (SELECT COUNT(*) FROM iws_script_orders
-                 WHERE o_totalprice < t) * 2
-                < (SELECT COUNT(*) FROM iws_script_orders) DO
-            SET t = t * 2;
-          END WHILE;
-          SELECT CAST(t AS DOUBLE) AS threshold,
-                 (SELECT COUNT(*) FROM iws_script_orders
-                  WHERE o_totalprice < t) AS n_below;
-        END
-        """
-    )
+    with staged(spark) as st:
+        st.conf("spark.sql.scripting.enabled", "true")
+        st.view("iws_script_orders", load(spark, sf_dir, "orders"))
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE t DOUBLE DEFAULT 1000.0;
+              WHILE (SELECT COUNT(*) FROM iws_script_orders
+                     WHERE o_totalprice < t) * 2
+                    < (SELECT COUNT(*) FROM iws_script_orders) DO
+                SET t = t * 2;
+              END WHILE;
+              SELECT CAST(t AS DOUBLE) AS threshold,
+                     (SELECT COUNT(*) FROM iws_script_orders
+                      WHERE o_totalprice < t) AS n_below;
+            END
+            """
+        )
 
 
 @register(

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and ``staged``: the per-invocation owner of
+every persist, temp view and conf change the engine makes.
 
 Reference entry point: ``/root/reference/pyspark-iceberg/
 interoperability.md:44-62`` starts PySpark with catalog confs; we do
@@ -11,8 +12,9 @@ spark-submit, so every knob here is also overridable via env).
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Spark lists the paths of a file-list read in a distributed job (one
 # task per path) once there are more than
@@ -73,3 +75,40 @@ def get_spark(app_name: str = "iceberg_workshop_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+class staged(ExitStack):
+    """Per-invocation session state, released on exit even on error.
+
+    ``with staged(spark) as st:`` hands out three kinds of state that
+    must not outlive the call: ``st.persist(df)`` caches a frame,
+    ``st.view(name, df)`` registers a temp view in ``df``'s own
+    session, and ``st.conf(key, value)`` sets a session conf. On exit,
+    by return or raise, every frame is unpersisted, every view dropped
+    and every conf restored (unset if it was unset before), in reverse
+    order. A result that must outlive the stage is materialised inside
+    it (``localCheckpoint``), which Spark's ContextCleaner frees.
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        super().__init__()
+        self.spark = spark
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self.callback(df.unpersist)
+        return df
+
+    def view(self, name: str, df: DataFrame) -> str:
+        df.createOrReplaceTempView(name)
+        self.callback(df.sparkSession.catalog.dropTempView, name)
+        return name
+
+    def conf(self, key: str, value: str) -> None:
+        conf = self.spark.conf
+        prior = conf.get(key, None)
+        conf.set(key, value)
+        if prior is None:
+            self.callback(conf.unset, key)
+        else:
+            self.callback(conf.set, key, prior)

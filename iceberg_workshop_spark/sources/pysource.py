@@ -40,6 +40,7 @@ from pyspark.sql.datasource import (
 )
 
 from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.session import staged
 
 SEQ_ROWS = 10_000
 SEQ_PARTS = 8
@@ -706,21 +707,23 @@ def q_source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pushdown_applied`` column is bool_and of a reader-side flag, so
     the oracle match PROVES the filter reached the source (scan-side
     pruning, the q_scan_pruned contract, extended to user-defined
-    sources)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    sources). The pushdown conf applies when the plan is optimized, so
+    the result is materialized before the stage restores it."""
     spark.dataSource.register(BucketPushDataSource)
-    df = (
-        spark.read.format("iws_bucketed")
-        .option("rows", str(PUSH_ROWS))
-        .option("buckets", str(PUSH_BUCKETS))
-        .option("partitions", str(PUSH_PARTS))
-        .load()
-        .filter(F.col("bucket") == 3)
-    )
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("i").alias("min_i"),
-        F.max("i").alias("max_i"),
-        F.bool_and("pruned").alias("pushdown_applied"),
-        F.min("h").alias("min_h"),
-    )
+    with staged(spark) as st:
+        st.conf("spark.sql.python.filterPushdown.enabled", "true")
+        df = (
+            spark.read.format("iws_bucketed")
+            .option("rows", str(PUSH_ROWS))
+            .option("buckets", str(PUSH_BUCKETS))
+            .option("partitions", str(PUSH_PARTS))
+            .load()
+            .filter(F.col("bucket") == 3)
+        )
+        return df.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("i").alias("min_i"),
+            F.max("i").alias("max_i"),
+            F.bool_and("pruned").alias("pushdown_applied"),
+            F.min("h").alias("min_h"),
+        ).localCheckpoint(eager=True)

@@ -10,6 +10,7 @@ predicate pushdown + column pruning handles the rest declaratively.
 from __future__ import annotations
 
 import os
+from string import Formatter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,7 +64,7 @@ def ensure_utc_session(spark: SparkSession) -> None:
 # and sf_dir; fixture files are read-only for a process's lifetime.
 import weakref
 
-_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], tuple[DataFrame, bool]]]" = (
     weakref.WeakKeyDictionary()
 )
 
@@ -135,7 +136,20 @@ def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name, df in load_all_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+# Binds a fixture SQL template's ``{table}`` placeholders to the bare
+# table names, i.e. the views the DuckDB oracle registers.
+FIXTURE_VIEWS = {name: name for name in TABLE_NAMES}
+
+
+def fixture_sql(
+    spark: SparkSession, sf_dir: str, tpl: str, **frames: DataFrame
+) -> DataFrame:
+    """``spark.sql`` over a template whose ``{table}`` placeholders name
+    fixture tables (``{{``/``}}`` for literal braces); ``frames`` bind
+    any other placeholders. Every placeholder becomes a Spark
+    DataFrame parameter, whose view Spark drops when the call returns,
+    so the query registers no view of its own."""
+    for field in {f for _, f, _, _ in Formatter().parse(tpl) if f}:
+        if field in FIXTURE_VIEWS and field not in frames:
+            frames[field] = load(spark, sf_dir, field)
+    return spark.sql(tpl, **frames)

@@ -26,8 +26,11 @@ from pyspark.sql import functions as F
 
 from iceberg_workshop_spark.exprs import dsum
 from iceberg_workshop_spark.registry import register
+from iceberg_workshop_spark.session import staged
 
 _sink_ids = itertools.count()
+# State-store instances per stateful stream: one per shuffle partition.
+STREAM_SHUFFLE_PARTITIONS = "8"
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A streaming file source needs an explicit schema; take it from a
@@ -71,15 +74,13 @@ def _drain(
     fixed cost dominates a drain (measured 17 s → 3 s on the
     stream-stream join at 8). Streaming partition count should track
     state volume, not core count, so the drain pins a smaller value
-    while the query runs (env-tunable for a real cluster, where a
-    checkpoint's partitioning is sticky anyway) and restores the batch
-    conf after."""
+    while the query runs and restores the batch conf after. The
+    memory sink's view is dropped too; the returned frame keeps the
+    sink's rows."""
     sess = stream_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prior = sess.conf.get(key)
     name = f"iws_stream_sink_{next(_sink_ids)}"
-    sess.conf.set(key, os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    try:
+    with staged(sess) as st:
+        st.conf("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -92,9 +93,9 @@ def _drain(
             .start()
         )
         query.awaitTermination()
-    finally:
-        sess.conf.set(key, prior)
-    return stream_df.sparkSession.table(name)
+        sink = sess.table(name)
+        st.view(name, sink)  # the memory sink's own view, dropped on exit
+        return sink
 
 
 @register(
@@ -718,17 +719,16 @@ def q_stream_agg_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap. Conf is scoped to this query and restored after — provider
     choice is sticky per checkpoint in production, so a real cluster
     sets it once at job start."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    ckey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    prior = spark.conf.get(key, None)
-    cprior = spark.conf.get(ckey, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    spark.conf.set(ckey, "true")
-    try:
+    with staged(spark) as st:
+        st.conf(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
+        st.conf(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
+        )
         agg = (
             _events_stream(spark, sf_dir)
             .withWatermark("ts", "1 hour")
@@ -747,17 +747,6 @@ def q_stream_agg_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         # complete-mode memory sink is already materialized; localCheckpoint
         # pins the rows so conf restoration cannot affect the plan.
         return out.localCheckpoint(eager=True)
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-        # restore (not blindly unset) the changelog conf too — a
-        # session that set it explicitly keeps its setting
-        if cprior is None:
-            spark.conf.unset(ckey)
-        else:
-            spark.conf.set(ckey, cprior)
 
 
 @register(

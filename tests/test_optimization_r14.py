@@ -99,7 +99,10 @@ def test_adjacency_triangle_count_empty_graph(spark):
 
 
 def test_band_pairs_materialization_keeps_pairs(spark):
+    from pyspark import StorageLevel
+
     from iceberg_workshop_spark.llm.dedup import _band_pairs
+    from iceberg_workshop_spark.session import staged
 
     rows = [
         (1, 0, "a|b"), (2, 0, "a|b"), (3, 0, "x|y"),
@@ -108,15 +111,15 @@ def test_band_pairs_materialization_keeps_pairs(spark):
     buckets = spark.createDataFrame(
         rows, "doc_id long, band_id int, sig string"
     )
-    releases: list = []
-    got = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in _band_pairs(buckets, releases).collect()
-    )
-    for df in releases:
-        df.unpersist()
+    with staged(spark) as st:
+        got = sorted(
+            (r["doc_a"], r["doc_b"]) for r in _band_pairs(buckets, st).collect()
+        )
+        assert buckets.storageLevel != StorageLevel.NONE, (
+            "_band_pairs must persist its buckets in the caller's stage"
+        )
     assert got == [(1, 2), (1, 4)]
-    assert releases, "_band_pairs must hand back its persisted frame"
+    assert buckets.storageLevel == StorageLevel.NONE
 
 
 def test_load_memoization_plan_only_and_keyed(spark):

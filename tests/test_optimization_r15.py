@@ -11,7 +11,9 @@ Round 15 re-adjudicated the round-14 eager-checkpoint/persist staging
 2. Every dedup/graph query that persists intermediates must release
    them before returning (persists are invocation-scoped — the bench
    re-invokes queries, and a leaked persist makes later invocations
-   silently reuse the first run's materialized cache).
+   silently reuse the first run's materialized cache). The
+   registry-wide hygiene assertion in test_oracle_parity checks this
+   for every query; the cases here only run the queries.
 """
 
 from __future__ import annotations
@@ -33,8 +35,6 @@ def test_triangles_leave_no_temp_view_pins(spark):
     from iceberg_workshop_spark.registry import queries
 
     qs = queries()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    before_empty = cm.isEmpty()
     before_views = set(_iws_gr_views(spark))
     row = qs["q_graph_triangles"](spark, SF_DIR).collect()[0]
     assert row["n_triangles"] >= 0 and row["n_edges"] > 0
@@ -43,8 +43,6 @@ def test_triangles_leave_no_temp_view_pins(spark):
     assert set(_iws_gr_views(spark)) == before_views, (
         "triangle queries must not register staged temp views"
     )
-    if before_empty:
-        assert cm.isEmpty(), "triangle queries left DataFrames persisted"
 
 
 @pytest.mark.parametrize(
@@ -59,15 +57,11 @@ def test_triangles_leave_no_temp_view_pins(spark):
     ],
 )
 def test_query_releases_every_persist(spark, name):
-    # Same pin as test_prefix_filter_persists_released, extended to
-    # every query the round-14/15 audits found persisting frames into
-    # a LAZILY returned plan (or releasing only part of what the
-    # banding helpers now persist). CacheManager-level persists must
-    # net to zero per invocation.
+    # The queries the round-14/15 audits found persisting frames into a
+    # LAZILY returned plan. The CacheManager check that was here only
+    # ran when the cache happened to be empty beforehand; the
+    # registry-wide hygiene assertion in test_oracle_parity now checks
+    # every query unconditionally.
     from iceberg_workshop_spark.registry import queries
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    before_empty = cm.isEmpty()
     queries()[name](spark, SF_DIR)
-    if before_empty:
-        assert cm.isEmpty(), f"{name} left DataFrames persisted"

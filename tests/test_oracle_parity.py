@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from perfbench.tracing import Hygiene
 from tests.conftest import SF_DIR
 from tests.helpers import assert_driver_sortable, assert_frames_match
 
@@ -19,6 +20,8 @@ def _all_query_names():
 def test_query_matches_oracle(spark, oracle, name):
     from iceberg_workshop_spark.registry import oracle_sql, queries
 
+    # baseline after the session's own pins (UTC, nanosAsLong)
+    hygiene = Hygiene(spark)
     df = queries()[name](spark, SF_DIR)
     # Driver-canonicalizer contract: no raw ARRAY/MAP result columns —
     # the driver's pandas lexsort cannot hash them (round-8
@@ -34,6 +37,10 @@ def test_query_matches_oracle(spark, oracle, name):
         f"the driver's hashability contract; serialize them to strings"
     )
     spark_pdf = df.toPandas()
+    # An invocation leaves no persisted RDD (local checkpoints aside),
+    # temp view or changed session conf behind.
+    leaked = {k: v for k, v in hygiene.delta().items() if v}
+    assert not leaked, f"{name} left session state behind: {leaked}"
     sql = oracle_sql().get(name)
     if sql is None:
         # rows-only check (driver's weak path) — pin non-empty output
